@@ -26,8 +26,10 @@ pruning, not a table lookup.
 
 from __future__ import annotations
 
+import math
+import numbers
 from collections.abc import Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -376,6 +378,28 @@ def get_message(
 _WILDCARDS = (-1, "-1")
 
 
+def _sql_literal(v) -> str:
+    """The one way a Python value enters generated SQL text.
+
+    Strings travel as hex-encoded binary cast back to STRING, so no
+    quote, backslash or parser setting (escapedStringLiterals) can end
+    the literal early; Catalyst folds the cast back into a plain string
+    literal before filter pushdown. Numbers are rendered from their
+    int/float value, never from caller-supplied text."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, numbers.Integral):
+        return str(int(v))
+    if isinstance(v, numbers.Real):
+        f = float(v)
+        if math.isfinite(f):
+            return f"{f!r}D"
+        return f"CAST('{f!r}' AS DOUBLE)"  # 'nan', 'inf', '-inf'
+    if isinstance(v, str):
+        return f"CAST(X'{v.encode().hex()}' AS STRING)"
+    raise TypeError(f"no SQL literal for {type(v).__name__} value {v!r}")
+
+
 @dataclass(frozen=True)
 class Arguments:
     """The requested (field, src, dst, filter) series — the reference
@@ -386,46 +410,41 @@ class Arguments:
     never launch a Spark job (in local mode every job — even take(1)
     on a 3-row relation — costs ~0.5s of scheduling overhead; a query
     that probes its own arguments twice pays a second of pure tax).
-    `df(spark)` materializes the broadcastable relation lazily."""
+    `df(spark)` materializes the broadcastable relation lazily;
+    `pattern_sql()` is the same rows as a log predicate. Both are built
+    as SQL text, so their cost is a constant number of py4j calls
+    whatever the row count."""
 
     rows: tuple[tuple, ...]
     schema: str = "uevol_field_id int, src_id int, dst_id int, filter string"
+
+    @property
+    def _fields(self) -> list[tuple[str, str]]:
+        return [tuple(f.strip().split(" ", 1)) for f in self.schema.split(",")]
 
     def df(self, spark) -> DataFrame:
         # Literal in-plan relation, not createDataFrame(rows): the
         # Python-RDD path (applySchemaToPythonRDD) plans as a Scan
         # ExistingRDD with UnknownPartitioning — a parallelize over
         # default-parallelism splits whose every consumption pays a
-        # task set of Python deserialization, twice per query when the
-        # arguments feed two branches. inline(array(struct-literals))
+        # task set of Python deserialization. inline(array(structs))
         # over a one-partition range is pure JVM, whole-stage codegen,
-        # zero Python boundary; the cast pins the exact legacy schema
-        # (types and nullability — asserted by test_plans).
-        struct_t = (
-            "struct<"
-            + ",".join(
-                f"{f.strip().split(' ')[0]}:{f.strip().split(' ', 1)[1]}"
-                for f in self.schema.split(",")
+        # zero Python boundary; the outer cast pins the exact legacy
+        # schema (types and nullability — asserted by test_plans).
+        fields = self._fields
+        structs = ", ".join(
+            "struct("
+            + ", ".join(
+                f"CAST({_sql_literal(v)} AS {t})"
+                for v, (_n, t) in zip(row, fields, strict=True)
             )
-            + ">"
+            + ")"
+            for row in self.rows
         )
-        names = [f.strip().split(" ")[0] for f in self.schema.split(",")]
-        arr = (
-            F.array(
-                *[
-                    F.struct(
-                        *[
-                            F.lit(v).alias(n)
-                            for v, n in zip(row, names, strict=True)
-                        ]
-                    )
-                    for row in self.rows
-                ]
-            )
-            if self.rows
-            else F.array()
-        ).cast(f"array<{struct_t}>")
-        return spark.range(0, 1, 1, 1).select(F.inline(arr))
+        struct_t = ",".join(f"{n}:{t}" for n, t in fields)
+        return spark.range(0, 1, 1, 1).selectExpr(
+            f"inline(CAST(array({structs}) AS array<struct<{struct_t}>>))"
+        )
 
     @property
     def has_wildcard(self) -> bool:
@@ -433,6 +452,28 @@ class Arguments:
             r[0] in _WILDCARDS or r[1] in _WILDCARDS or r[2] in _WILDCARDS
             for r in self.rows
         )
+
+    def pattern_sql(self) -> str:
+        """SQL predicate over the log selecting every requested
+        series' rows: each argument row is the conjunction of
+        equalities on its non-wildcard key columns, and the rows are
+        OR-ed. Plain column-vs-literal comparisons, so Catalyst pushes
+        it into the parquet scan (PushedFilters). "TRUE" when a row
+        wildcards every key column; "FALSE" for an empty set."""
+        types = dict(self._fields)
+        terms = []
+        # first-seen order: stable plan text, and no sort over mixed
+        # value types
+        for key in dict.fromkeys(r[:3] for r in self.rows):
+            eqs = [
+                f"`{c}` = CAST({_sql_literal(v)} AS {types[c]})"
+                for c, v in zip(SERIES_KEY, key)
+                if v not in _WILDCARDS
+            ]
+            if not eqs:
+                return "TRUE"
+            terms.append("(" + " AND ".join(eqs) + ")")
+        return " OR ".join(terms) or "FALSE"
 
 
 def make_arguments(
@@ -448,11 +489,19 @@ def make_arguments(
     it's just zip — strict, so a length mismatch raises instead of
     silently dropping trailing fields).
 
-    -1 entries are wildcards; they are expanded against the actual
-    series of the log by `expand_arguments` (the reference validates/
-    expands against the latest snapshot the same way,
-    SQL/CreateArgumentsTable.sql:74-92) — get_multiple_fields and
-    get_update_history expand automatically.
+    -1 entries are wildcards. A wildcard row matches every series of
+    the log, seen at any message id, whose non-wildcard columns equal
+    its own (the reference validates/expands against the latest
+    snapshot the same way, SQL/CreateArgumentsTable.sql:74-92);
+    get_multiple_fields and get_update_history expand automatically.
+    Once any row is a wildcard, the set resolves to the distinct
+    matching series of the log: a concrete row whose series never
+    occurs yields nothing, and repeated rows collapse.
+
+    Filter rule: when several rows match one series, the series takes
+    exactly one row's filter — a concrete row (no -1 column) wins over
+    a wildcard row, and among rows of equal rank the first in argument
+    order wins.
 
     `spark` is unused (kept for signature stability); the rows stay
     driver-side until a plan needs the relation.
@@ -468,21 +517,42 @@ def make_arguments(
     return Arguments(rows)
 
 
-def expand_arguments(arguments: DataFrame, instance_field: DataFrame) -> DataFrame:
+def expand_arguments(
+    arguments: DataFrame,
+    instance_field: DataFrame,
+    pattern: str | None = None,
+) -> DataFrame:
     """Resolve -1 wildcards to the concrete series present in the log
     (reference: CreateArgumentsTable.sql:74-92 validates/expands the
     argument intervals against the latest snapshot). A concrete
     argument passes through iff its series exists; a -1 column matches
-    every value."""
-    series = instance_field.select(*SERIES_KEY).distinct()
-    a, s = arguments.alias("a"), series.alias("s")
+    every value. One row per series; its filter follows the rule on
+    `make_arguments` (concrete before wildcard, then argument order —
+    the row order of `arguments`).
 
-    def match(col: str):
+    `pattern` (Arguments.pattern_sql of the same rows) pre-filters the
+    log inside the scan, so the distinct runs over the requested
+    series' rows only instead of over every series of the log."""
+    log = instance_field if pattern is None else instance_field.filter(pattern)
+    series = log.select(*SERIES_KEY).distinct()
+
+    def sentinel(col: str):
         # cast the -1 sentinel to the argument column's own type so a
         # string-keyed series ('click') compares as '-1', not as a
         # failing string->bigint ANSI cast
-        sentinel = F.lit(-1).cast(arguments.schema[col].dataType)
-        return (F.col(f"a.{col}") == sentinel) | (
+        return F.lit(-1).cast(arguments.schema[col].dataType)
+
+    wild = [F.col(c) == sentinel(c) for c in SERIES_KEY]
+    a = arguments.select(
+        *SERIES_KEY,
+        "filter",
+        (wild[0] | wild[1] | wild[2]).cast("int").alias("__rank"),
+        F.monotonically_increasing_id().alias("__ord"),
+    ).alias("a")
+    s = series.alias("s")
+
+    def match(col: str):
+        return (F.col(f"a.{col}") == sentinel(col)) | (
             F.col(f"a.{col}") == F.col(f"s.{col}")
         )
 
@@ -494,13 +564,12 @@ def expand_arguments(arguments: DataFrame, instance_field: DataFrame) -> DataFra
             F.broadcast(a),
             match("uevol_field_id") & match("src_id") & match("dst_id"),
         )
-        .select(
-            F.col("s.uevol_field_id").alias("uevol_field_id"),
-            F.col("s.src_id").alias("src_id"),
-            F.col("s.dst_id").alias("dst_id"),
-            F.col("a.filter").alias("filter"),
+        .groupBy(*[F.col(f"s.{c}").alias(c) for c in SERIES_KEY])
+        .agg(
+            F.min_by(
+                F.col("a.filter"), F.struct(F.col("a.__rank"), F.col("a.__ord"))
+            ).alias("filter")
         )
-        .dropDuplicates(SERIES_KEY)
     )
 
 
@@ -519,22 +588,6 @@ def _maybe_expand(arguments: DataFrame, instance_field: DataFrame) -> DataFrame:
     return expand_arguments(arguments, instance_field) if has_wildcard else arguments
 
 
-def _resolve_args(
-    arguments: Arguments | DataFrame, instance_field: DataFrame
-) -> tuple[DataFrame, tuple[tuple, ...] | None]:
-    """-> (args_df, rows | None). rows are the driver-known argument
-    tuples when learning them needs no Spark job (an Arguments set
-    with no wildcards); None means only the DataFrame knows them
-    (wildcard expansion against the log, or a caller-supplied
-    DataFrame — that path keeps the legacy take(1) probe)."""
-    if isinstance(arguments, Arguments):
-        df = arguments.df(instance_field.sparkSession)
-        if arguments.has_wildcard:
-            return expand_arguments(df, instance_field), None
-        return df, arguments.rows
-    return _maybe_expand(arguments, instance_field), None
-
-
 _MAX_PUSHDOWN_SERIES = 64
 # get_update_history per-series filters: above this many filtered
 # series, the AND-chain encoding (O(rows x filtered series) per-row
@@ -543,39 +596,62 @@ _MAX_PUSHDOWN_SERIES = 64
 _MAX_FILTER_CHAIN = 8
 
 
-def _series_restrict(
-    df: DataFrame,
-    arguments: DataFrame,
-    arg_rows: tuple[tuple, ...] | None,
-) -> DataFrame:
-    """Restrict the log to the argument series.
+@dataclass(frozen=True)
+class _Resolved:
+    """Arguments resolved against one log.
 
-    When the series are driver-known (arg_rows) and few, the
-    restriction is an OR-of-equality-conjunctions Column — a plain
-    predicate Catalyst pushes into the parquet scan (PushedFilters),
-    engaging row-group stats / dictionary / bloom pruning. A broadcast
-    semi-join filters just as early in the executor but can never
-    reach the scan, so at 100 TB the pushed predicate is the
-    difference between skipping row groups and reading them. Falls
-    back to the semi-join for wildcard-expanded / DataFrame arguments
-    or long argument lists (a 1000-term OR predicate is worse than a
-    broadcast hash probe).
-    """
-    if arg_rows is not None and 0 < len(arg_rows) <= _MAX_PUSHDOWN_SERIES:
-        pred = None
-        # sorted: a set-ordered OR chain would make the emitted plan
-        # text vary run-to-run with PYTHONHASHSEED
-        for f, s, d in sorted({(r[0], r[1], r[2]) for r in arg_rows}):
-            c = (
-                (F.col("uevol_field_id") == F.lit(f))
-                & (F.col("src_id") == F.lit(s))
-                & (F.col("dst_id") == F.lit(d))
+    `df`: one row per requested series (+ filter), wildcards expanded.
+    `rows`: the driver-known argument tuples when learning them needs
+    no Spark job (an Arguments set with no wildcards), else None.
+    `pattern`: the SQL predicate selecting the series' log rows, or
+    None when only `df` knows the series."""
+
+    df: DataFrame
+    rows: tuple[tuple, ...] | None
+    pattern: str | None
+
+    def restrict(self, log: DataFrame) -> DataFrame:
+        """Restrict the log to the argument series.
+
+        With a pattern the restriction is a plain predicate Catalyst
+        pushes into the parquet scan (PushedFilters), engaging
+        row-group stats / dictionary / bloom pruning. A broadcast
+        semi-join filters just as early in the executor but can never
+        reach the scan, so at 100 TB the pushed predicate is the
+        difference between skipping row groups and reading them.
+        Wildcard Arguments always restrict by their pattern. The
+        semi-join serves DataFrame arguments and concrete lists longer
+        than _MAX_PUSHDOWN_SERIES (a 1000-term OR predicate is worse
+        than a broadcast hash probe)."""
+        if self.pattern is not None:
+            return log.filter(self.pattern)
+        return log.join(
+            F.broadcast(self.df.select(*SERIES_KEY)), SERIES_KEY, "left_semi"
+        )
+
+
+def _resolve_args(
+    arguments: Arguments | DataFrame | _Resolved, instance_field: DataFrame
+) -> _Resolved:
+    """Arguments -> _Resolved; an already resolved set passes through
+    (get_update_history_chunked hands its own to every chunk).
+    DataFrame arguments keep the take(1) wildcard probe."""
+    if isinstance(arguments, _Resolved):
+        return arguments
+    if isinstance(arguments, Arguments):
+        df = arguments.df(instance_field.sparkSession)
+        if arguments.has_wildcard:
+            pattern = arguments.pattern_sql()
+            return _Resolved(
+                expand_arguments(df, instance_field, pattern), None, pattern
             )
-            pred = c if pred is None else (pred | c)
-        return df.filter(pred)
-    return df.join(
-        F.broadcast(arguments.select(*SERIES_KEY)), SERIES_KEY, "left_semi"
-    )
+        pattern = (
+            arguments.pattern_sql()
+            if len(arguments.rows) <= _MAX_PUSHDOWN_SERIES
+            else None
+        )
+        return _Resolved(df, arguments.rows, pattern)
+    return _Resolved(_maybe_expand(arguments, instance_field), None, None)
 
 
 def get_multiple_fields(
@@ -604,11 +680,18 @@ def get_multiple_fields(
     win: the log scan is bounded by one snapshot epoch, not the full
     history.
     """
-    arguments, arg_rows = _resolve_args(arguments, instance_field)
     if snapshot_index is None:
-        return _multiple_fields_resolved(
-            instance_field, arguments, at_instance_message_id, default_value,
-            arg_rows=arg_rows,
+        if isinstance(arguments, Arguments) and arguments.has_wildcard:
+            # the series come from the same pattern-restricted scan
+            # that yields their latest values: no expansion relation
+            return _multiple_fields_log(
+                instance_field.filter(arguments.pattern_sql()),
+                None, at_instance_message_id, default_value,
+            )
+        res = _resolve_args(arguments, instance_field)
+        return _multiple_fields_log(
+            res.restrict(instance_field), res.df, at_instance_message_id,
+            default_value,
         )
     if snapshot_rows is None:
         raise ValueError("snapshot_index given without snapshot_rows")
@@ -616,10 +699,9 @@ def get_multiple_fields(
         instance_field,
         snapshot_index,
         snapshot_rows,
-        arguments,
+        _resolve_args(arguments, instance_field),
         at_instance_message_id,
         default_value,
-        arg_rows=arg_rows,
     )
 
 
@@ -627,10 +709,9 @@ def _multiple_fields_snapshot_seeded(
     instance_field: DataFrame,
     snapshot_index: DataFrame,
     snapshot_rows: DataFrame,
-    arguments: DataFrame,
+    args: _Resolved,
     at_instance_message_id: int,
     default_value: float,
-    arg_rows: tuple[tuple, ...] | None,
 ) -> DataFrame:
     """Snapshot-seeded Q2 body (arguments already resolved).
 
@@ -671,13 +752,11 @@ def _multiple_fields_snapshot_seeded(
     # 2. deltas bounded to one snapshot epoch — the scan-pruning win.
     # Inclusive lower bound: re-applying the boundary update is
     # idempotent under the argmax (same convention as get_message).
-    deltas = _series_restrict(
+    deltas = args.restrict(
         instance_field.filter(
             (F.col("instance_message_id") >= F.lit(snap_min_start))
             & (F.col("instance_message_id") <= F.lit(at_instance_message_id))
-        ),
-        arguments,
-        arg_rows,
+        )
     )
     delta_latest = latest_per_key(
         deltas, SERIES_KEY + ["relative_path"], "instance_message_id", TIEBREAK
@@ -689,11 +768,11 @@ def _multiple_fields_snapshot_seeded(
     )
 
     # 3. snapshot seeds for the argument series, flattened to paths.
+    # A wildcard pattern may also admit snapshot series the log never
+    # saw; the final left join from the resolved series drops them.
     def seed(name: str) -> DataFrame:
-        rows = _series_restrict(
-            snapshot_rows.filter(F.col("snapshot_name") == F.lit(name)),
-            arguments,
-            arg_rows,
+        rows = args.restrict(
+            snapshot_rows.filter(F.col("snapshot_name") == F.lit(name))
         )
         return flatten_json_value(
             rows.select(*SERIES_KEY, "instance_message_id", "json_value")
@@ -720,7 +799,7 @@ def _multiple_fields_snapshot_seeded(
     # <= paths-per-series rows for the requested series only —
     # broadcast it, not the preserved arguments side.
     return (
-        arguments.select(*SERIES_KEY)
+        args.df.select(*SERIES_KEY)
         .join(F.broadcast(best), SERIES_KEY, "left")
         .select(
             *SERIES_KEY,
@@ -734,46 +813,79 @@ def _multiple_fields_snapshot_seeded(
     )
 
 
-def _multiple_fields_resolved(
-    instance_field: DataFrame,
-    arguments: DataFrame,
+def _multiple_fields_log(
+    restricted: DataFrame,
+    preserved: DataFrame | None,
     at_instance_message_id: int,
-    default_value: float = -1.0,
-    arg_rows: tuple[tuple, ...] | None = None,
+    default_value: float,
 ) -> DataFrame:
-    """get_multiple_fields body once wildcards are already resolved —
-    callers that resolved the arguments themselves must not pay a
-    second resolution probe."""
-    narrowed = _series_restrict(
-        instance_field.filter(
-            F.col("instance_message_id") <= F.lit(at_instance_message_id)
-        ),
-        arguments,
-        arg_rows,
+    """Log-only get_multiple_fields body over the log already
+    restricted to the requested series.
+
+    `preserved` (the resolved argument relation) gets one output row
+    per argument row, duplicates included: its series' latest value
+    per path at the target, or one default row. `preserved=None`
+    (wildcard Arguments) takes the series from `restricted` itself —
+    every series seen at ANY message id, so one seen only after the
+    target still gets its default row — and the log scan happens once.
+
+    Plan: one partial-aggregated exchange on (series, path), then a
+    single partition, whose per-series step, join and final sort need
+    no further exchange and no broadcast job. The output is bounded by
+    the request (it is collected to the driver anyway); a global sort
+    would cost a bounds-sampling job and a range exchange per query.
+    """
+    at = _sql_literal(int(at_instance_message_id))
+    if preserved is not None:
+        # the target bound rides into the scan with the series pattern
+        restricted = restricted.filter(f"instance_message_id <= {at}")
+    # latest update ≤ target per (series, path): max over the
+    # (id, iteration) total order (an exact tie keeps the larger
+    # value); rows past the target or with a NULL key column (which
+    # wildcard expansion never matched) carry none.
+    # The per-query literals stay in the scan stage's projection
+    # (compiled with the pushed filter anyway): the aggregate's own
+    # generated code then repeats across queries and is compiled once.
+    ok = " AND ".join(
+        [f"instance_message_id <= {at}"]
+        + [f"`{c}` IS NOT NULL" for c in SERIES_KEY]
     )
-    latest = latest_per_key(
-        narrowed, SERIES_KEY + ["relative_path"], "instance_message_id", TIEBREAK
-    ).select(
-        *SERIES_KEY,
-        "relative_path",
-        F.col("new_value").cast("double").alias("value"),
-        "instance_message_id",
-    )
-    # latest has <= one row per requested (series, path): broadcast it,
-    # not the preserved arguments side.
-    return (
-        arguments.select(*SERIES_KEY)
-        .join(F.broadcast(latest), SERIES_KEY, "left")
-        .select(
+    latest = (
+        restricted.selectExpr(
             *SERIES_KEY,
-            F.coalesce("relative_path", F.lit("000")).alias("relative_path"),
-            F.coalesce("value", F.lit(default_value)).alias("value"),
-            F.coalesce("instance_message_id", F.lit(-1)).alias(
-                "instance_message_id"
-            ),
+            "relative_path",
+            f"CASE WHEN {ok} THEN struct(instance_message_id AS i, "
+            "iteration AS t, CAST(new_value AS DOUBLE) AS v) END AS l",
         )
-        .orderBy(*SERIES_KEY, "relative_path")
+        .groupBy(*SERIES_KEY, "relative_path")
+        .agg(F.expr("max(l) AS l"))
+        .coalesce(1)
     )
+    if preserved is None:
+        # one row per path with a value, or one NULL row for a series
+        # with none
+        rows = (
+            latest.groupBy(*SERIES_KEY)
+            .agg(F.expr(
+                "collect_list(CASE WHEN l IS NOT NULL THEN struct("
+                "relative_path AS p, l) END) AS ls"
+            ))
+            .selectExpr(*SERIES_KEY, "explode_outer(ls) AS e")
+            .selectExpr(*SERIES_KEY, "e.p AS relative_path", "e.l AS l")
+        )
+    else:
+        # an argument list is tiny and an Arguments relation already
+        # one partition: with both sides there, the hash join needs
+        # neither an exchange nor a broadcast job
+        rows = preserved.select(*SERIES_KEY).coalesce(1).join(
+            latest.hint("shuffle_hash"), SERIES_KEY, "left"
+        )
+    return rows.selectExpr(
+        *SERIES_KEY,
+        "coalesce(relative_path, '000') AS relative_path",
+        f"coalesce(l.v, CAST({_sql_literal(default_value)} AS DOUBLE)) AS value",
+        "coalesce(l.i, -1) AS instance_message_id",
+    ).orderBy(*SERIES_KEY, "relative_path")
 
 
 def _scalar_state(
@@ -843,10 +955,10 @@ def get_multiple_fields_history(
     formulation like get_multiple_fields — snapshot seeding is
     get_message's machinery.
     """
-    arguments, arg_rows = _resolve_args(arguments, instance_field)
-    restricted = _series_restrict(instance_field, arguments, arg_rows)
+    args = _resolve_args(arguments, instance_field)
     return _scalar_state(
-        restricted, arguments, at_instance_message_id, default_value
+        args.restrict(instance_field), args.df, at_instance_message_id,
+        default_value,
     ).orderBy(*SERIES_KEY)
 
 
@@ -907,7 +1019,8 @@ def get_update_history(
     many histories per session may prefer use_cache=False and let the
     subplans recompute).
     """
-    arguments, arg_rows = _resolve_args(arguments, instance_field)
+    args = _resolve_args(arguments, instance_field)
+    arguments, arg_rows = args.df, args.rows
     # ONE log scan feeds both the start-state and the in-window
     # branches: id ≤ end + the series restriction (pushed into the
     # scan when the series are driver-known). Cached because both
@@ -916,7 +1029,7 @@ def get_update_history(
     base = instance_field.filter(
         F.col("instance_message_id") <= F.lit(end_instance_message_id)
     )
-    base = _series_restrict(base, arguments, arg_rows)
+    base = args.restrict(base)
     if use_cache:
         base = base.cache()
 
@@ -1355,10 +1468,11 @@ def get_update_history_chunked(
     # expansion join and its probe jobs; the cache is narrow (series
     # keys + filter strings) and LRU-evictable — the gate/bench
     # hygiene sweep reclaims it like every other helper cache
-    args_df, arg_rows = _resolve_args(arguments, instance_field)
-    if arg_rows is None:
-        args_df = args_df.cache()
-    restricted = _series_restrict(instance_field, args_df, arg_rows)
+    args = _resolve_args(arguments, instance_field)
+    if args.rows is None:
+        args = replace(args, df=args.df.cache())
+    args_df, arg_rows = args.df, args.rows
+    restricted = args.restrict(instance_field)
     if n_chunks is None:
         if max_dense_cells is None:
             n_chunks = 1
@@ -1396,10 +1510,6 @@ def get_update_history_chunked(
         (F.col("instance_message_id") > F.lit(start_instance_message_id))
         & F.col("new_value").isNotNull()
     )
-    # driver-known Arguments keep their pushed-predicate restriction
-    # inside each chunk; DataFrame/wildcard args pass through the
-    # cached resolution above
-    chunk_args = arguments if arg_rows is not None else args_df
 
     seeds = (
         _chunk_seeds(in_window, scalar_start, bounds)
@@ -1414,7 +1524,7 @@ def get_update_history_chunked(
             seed = seeds.filter(F.col("__chunk") == i - 1).drop("__chunk")
         piece = get_update_history(
             instance_field,
-            chunk_args,
+            args,  # resolved once: no per-chunk probe or expansion
             bounds[i],
             bounds[i + 1],
             pivot=False,

@@ -1115,6 +1115,18 @@ def _domain_log(ev: DataFrame) -> DataFrame:
     )
 
 
+def _max_event_id(ev: DataFrame) -> int:
+    """max(event_id) for the Q-family rows' as-of targets and history
+    windows; 0 on an empty log. Every bound derived from 0 is 0, and an
+    empty log has no update at or below it — nor at or below the
+    oracle's NULL bound — so each row answers what DuckDB answers:
+    default rows for the as-of rows, and an empty history (the one
+    time point carries the -1 default, which the purchase series'
+    `value >= 20` filter rejects)."""
+    mx = ev.agg(F.max("event_id")).collect()[0][0]
+    return 0 if mx is None else int(mx)
+
+
 def _domain_args(spark, with_filters: bool):
     from .plans.queries import Arguments
 
@@ -1135,9 +1147,9 @@ def q_multiple_fields_asof(spark, sf_dir):
     from .plans.queries import get_multiple_fields
 
     ev = _t(spark, sf_dir, "events")
-    cut = ev.agg(F.expr("max(event_id) * 3 DIV 5")).collect()[0][0]
+    cut = _max_event_id(ev) * 3 // 5
     args = _domain_args(spark, with_filters=False)
-    return get_multiple_fields(_domain_log(ev), args, int(cut)).orderBy(
+    return get_multiple_fields(_domain_log(ev), args, cut).orderBy(
         "uevol_field_id", "src_id"
     )
 
@@ -1176,9 +1188,9 @@ def q_multiple_fields_state(spark, sf_dir):
     from .plans.queries import get_multiple_fields_history
 
     ev = _t(spark, sf_dir, "events")
-    cut = ev.agg(F.expr("max(event_id) * 2 DIV 5")).collect()[0][0]
+    cut = _max_event_id(ev) * 2 // 5
     args = _domain_args(spark, with_filters=False)
-    return get_multiple_fields_history(_domain_log(ev), args, int(cut))
+    return get_multiple_fields_history(_domain_log(ev), args, cut)
 
 
 SQL_MULTIPLE_FIELDS_STATE = """
@@ -1213,7 +1225,7 @@ def q_multiple_fields_snapshot(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     log = _domain_log(ev)
-    mx = int(ev.agg(F.max("event_id")).collect()[0][0])
+    mx = _max_event_id(ev)
     snap_at, target = (mx * 2) // 5, (mx * 21) // 50
 
     sidx = spark.createDataFrame(
@@ -1353,8 +1365,8 @@ def _build_update_history_dense(spark, sf_dir):
     from .plans.queries import get_update_history
 
     ev = _t(spark, sf_dir, "events")
-    mx = ev.agg(F.max("event_id")).collect()[0][0]
-    start, end = int(mx) // 5, int(mx) * 3 // 5
+    mx = _max_event_id(ev)
+    start, end = mx // 5, mx * 3 // 5
     args = _domain_args(spark, with_filters=True)
     # grid-sized output (time points × series — unbounded at scale):
     # the final global orderBy was presentation-only, and its
@@ -1449,8 +1461,8 @@ def q_update_history_chunked(spark, sf_dir):
     from .plans.queries import get_update_history_chunked
 
     ev = _t(spark, sf_dir, "events")
-    mx = ev.agg(F.max("event_id")).collect()[0][0]
-    start, end = int(mx) // 10, int(mx) * 9 // 10
+    mx = _max_event_id(ev)
+    start, end = mx // 10, mx * 9 // 10
     args = _domain_args(spark, with_filters=True)
     # same presentation-sort removal as q_update_history_dense: the
     # chunk union is grid-sized, the compare order-insensitive

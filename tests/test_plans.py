@@ -1028,3 +1028,169 @@ def test_chunk_seeds_single_pass(spark):
     # 6-id-wide chunks split ids 105 and 110 across chunks 0 and 1
     assert rows16[(1, 0)] == 10.0
     assert rows16[(1, 1)] == 11.0
+
+
+def _replay_multiple_fields(log_rows, arg_rows, at, default=-1.0):
+    """Plain-Python get_multiple_fields. log_rows: (field, src, dst, id,
+    path, iteration, value). Without a wildcard every argument row
+    answers (duplicates and absent series included); with one, the
+    answer is the distinct log series matching any row, seen at any
+    id. Each series yields its paths' latest update ≤ at by
+    (id, iteration), or one default row."""
+    wild = (-1, "-1")
+    if any(v in wild for r in arg_rows for v in r[:3]):
+        series = sorted(
+            {
+                tuple(u[:3])
+                for u in log_rows
+                if any(
+                    all(a in wild or a == v for a, v in zip(r[:3], u[:3]))
+                    for r in arg_rows
+                )
+            }
+        )
+    else:
+        series = [tuple(r[:3]) for r in arg_rows]
+    out = []
+    for s in series:
+        latest = {}
+        for u in log_rows:
+            if tuple(u[:3]) == s and u[3] <= at:
+                old = latest.get(u[4])
+                if old is None or (u[3], u[5]) > (old[3], old[5]):
+                    latest[u[4]] = u
+        if not latest:
+            out.append((*s, "000", default, -1))
+        for p, u in latest.items():
+            v = default if u[6] is None else float(u[6])
+            out.append((*s, p, v, u[3]))
+    return sorted(out)
+
+
+@pytest.mark.parametrize("keyed", ["int", "string"])
+def test_get_multiple_fields_matches_python_replay(spark, keyed):
+    """Differential pin of the log-only Q2 semantics against a plain
+    replay: mixed wildcard/concrete lists, duplicated rows, an absent
+    series, a target before any event, nested relative_paths, NULL
+    values, same-id iteration ties, both argument schemas, a string
+    field id carrying a quote and a backslash (it travels through
+    generated SQL text), and the same sets passed as DataFrames."""
+    from alstom_spark_cassandra_spark.plans.queries import Arguments
+
+    if keyed == "int":
+        f1, f2, f3, absent = 1, 2, 3, 99
+        schema = "uevol_field_id int, src_id int, dst_id int, filter string"
+        log_schema = "uevol_field_id int"
+    else:
+        f1, f2, f3, absent = "click", "it's\\x", "view", "nope"
+        schema = "uevol_field_id string, src_id long, dst_id int, filter string"
+        log_schema = "uevol_field_id string"
+    log_rows = [
+        (f1, 1, 0, 10, "000", 0, 5),
+        (f1, 1, 0, 20, "000", 0, 6),
+        (f1, 1, 0, 20, "000", 1, 7),      # same id, later iteration wins
+        (f1, 2, 0, 15, "000", 0, 8),
+        (f2, 1, 0, 12, "a/b", 0, 1),      # nested paths
+        (f2, 1, 0, 18, "a/c", 0, 2),
+        (f2, 1, 0, 30, "a/b", 0, 3),
+        (f2, 2, 0, 20, "000", 0, None),   # NULL value -> default value
+        (f3, 1, 0, 40, "000", 0, 9),      # seen only after most targets
+        (f3, 3, 1, 11, "000", 0, 4),
+    ]
+    log = spark.createDataFrame(
+        log_rows,
+        f"{log_schema}, src_id int, dst_id int, instance_message_id long,"
+        " relative_path string, iteration int, new_value long",
+    )
+    arg_sets = [
+        ((f1, 1, 0, None), (f2, 1, 0, None)),
+        ((f1, 1, 0, None), (f1, 1, 0, None), (absent, 1, 0, None)),  # dup + absent
+        ((-1 if keyed == "int" else "-1", 1, 0, None),),              # Q1 shape
+        ((f2, -1, 0, None), (f1, 2, 0, None), (absent, 7, 7, None)),  # mixed
+        ((f2, -1, -1, None), (f2, 1, 0, None)),                       # overlap
+        ((f3, -1, -1, None),),
+        (),                                                           # empty set
+    ]
+    for rows in arg_sets:
+        for at in (0, 20, 100):
+            got = get_multiple_fields(log, Arguments(rows, schema), at).collect()
+            got_t = [tuple(r) for r in got]
+            expect = _replay_multiple_fields(log_rows, rows, at)
+            assert sorted(got_t) == expect, (rows, at)
+            # the output order is the presentation sort
+            key = [tuple(r[:4]) for r in got_t]
+            assert key == sorted(key), (rows, at)
+        # DataFrame arguments (the probe + expansion path) agree
+        got = get_multiple_fields(log, Arguments(rows, schema).df(spark), 20)
+        assert sorted(tuple(r) for r in got.collect()) == (
+            _replay_multiple_fields(log_rows, rows, 20)
+        ), rows
+
+
+def test_expand_arguments_filter_rule(spark, domain):
+    """Several argument rows matching one series give it ONE filter,
+    chosen deterministically: a concrete row beats a wildcard row, and
+    among equal ranks the first in argument order wins."""
+    from alstom_spark_cassandra_spark.plans.queries import (
+        Arguments,
+        expand_arguments,
+    )
+
+    def filters(rows):
+        a = Arguments(rows)
+        out = expand_arguments(a.df(spark), domain["log"], a.pattern_sql())
+        return {r.uevol_field_id: r.filter for r in out.collect()}
+
+    got = filters(((-1, 0, 0, "value >= 1"), (1, 0, 0, "value < 300")))
+    assert got[1] == "value < 300"
+    assert all(got[f] == "value >= 1" for f in range(2, N_FIELDS))
+    # the concrete row wins wherever it stands in the list
+    got = filters(((1, 0, 0, "value < 300"), (-1, 0, 0, "value >= 1")))
+    assert got[1] == "value < 300"
+    # equal rank: argument order decides
+    assert filters(((1, -1, -1, "A"), (-1, 0, 0, "B")))[1] == "A"
+    assert filters(((-1, 0, 0, "B"), (1, -1, -1, "A")))[1] == "B"
+
+    # and get_update_history applies the winner: every kept time point
+    # satisfies field 1's concrete filter
+    args = Arguments(((-1, 0, 0, "value >= 1"), (1, 0, 0, "value < 300")))
+    hist = get_update_history(domain["log"], args, 50, 120).collect()
+    assert hist and all(
+        r.value < 300 for r in hist if r.uevol_field_id == 1
+    )
+
+
+def test_wildcard_q1_one_pushed_scan(spark, domain, tmp_path):
+    """A wildcard Q1 (every field of one src) on a parquet log plans
+    with no nested-loop expansion join, restricts every log scan by
+    the src equality inside the scan, and runs in at most 6 jobs."""
+    path = str(tmp_path / "log.parquet")
+    domain["log"].write.parquet(path)
+    log = spark.read.parquet(path)
+    sc = spark.sparkContext
+    args = make_arguments(spark, [-1], [0], [0])
+    df = get_multiple_fields(log, args, 150)
+    old_len = spark.conf.get("spark.sql.maxMetadataStringLength")
+    spark.conf.set("spark.sql.maxMetadataStringLength", "10000")
+    try:
+        sc.setJobGroup("wildcard_q1", "wildcard Q1")
+        try:
+            rows = df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.maxMetadataStringLength", old_len)
+    expect = _replay_state(domain["log"], 150)
+    assert {r.uevol_field_id: r.value for r in rows} == {
+        f: float(v) for f, v in expect.items()
+    }
+    assert "BroadcastNestedLoopJoin" not in plan
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert scans
+    for ln in scans:
+        pushed = ln.split("PushedFilters: ", 1)[1]
+        assert "EqualTo(src_id,0)" in pushed, ln
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("wildcard_q1"))
+    assert 0 < n_jobs <= 6, n_jobs
