@@ -74,12 +74,11 @@ def retrieve_field(
     """Q2-interval: field updates matching dynamic filters, bounded to a
     seq_nb / time window (reference: RetrieveField.java:50-93).
 
-    `sort_output=False` keeps the update-clock order only WITHIN
-    partitions: the output is window-sized (unbounded at scale), so a
-    global orderBy costs a rangepartitioning exchange plus a
-    bounds-sampling re-execution of the child — callers whose compare
-    is order-insensitive (the oracle gate) skip it (the
-    get_update_history sort_output seam, r15).
+    The result is ordered by the update clock (`instance_message_id`);
+    `sort_output=False` returns it unordered, as get_update_history's
+    flag does. The output is window-sized (unbounded at scale), and the
+    global sort costs a rangepartitioning exchange plus a
+    bounds-sampling re-execution of the child.
 
     The reference resolves seq_nb and each time bound with separate
     `orderBy().first()` driver round-trips (RetrieveField.java:66-90).
@@ -113,9 +112,7 @@ def retrieve_field(
     )
 
     def _ordered(df: DataFrame) -> DataFrame:
-        if sort_output:
-            return df.orderBy("instance_message_id")
-        return df.sortWithinPartitions("instance_message_id")
+        return df.orderBy("instance_message_id") if sort_output else df
 
     if seq_nb is not None and seq_nb != -1:
         # seq_nb resolves to ONE message id and the log is filtered to

@@ -45,11 +45,22 @@ from pyspark.sql import types as T
 _TABLE_MEMO: WeakKeyDictionary = WeakKeyDictionary()
 
 # Bases under this root are write-side (streaming sinks, index
-# scratch): load_table never memoizes their listings (see the guard in
-# load_table). Module-level so tests can pin it.
+# scratch): no memo holds plans over them (see memoizable). Module-level
+# so tests can pin it.
 import tempfile as _tempfile  # noqa: E402
 
 _TMP_ROOT = _tempfile.gettempdir()
+
+
+def memoizable(base: str) -> bool:
+    """Whether a per-session memo may hold plans built over `base`.
+    A base under the system temp dir is a WRITE-side location
+    (streaming sinks, index scratch) that a query may mutate
+    mid-session, so neither load_table's scan memo nor a registered
+    plan memo may freeze its listing or a literal resolved from it.
+    Read-only data roots (the sf dirs) are memoizable."""
+    return not base.startswith(_TMP_ROOT)
+
 
 # Other per-session LAZY-plan memos (e.g. workloads._memo_query_df)
 # register here so one refresh hatch invalidates every layer that
@@ -285,12 +296,7 @@ def load_table(
         # LongType and the conf is unset).
         unit = spark.conf.get(CASSANDRA_TS_UNIT_CONF, None)
         return normalize_event_time(df, long_unit=unit)
-    # staleness guard (r15 VERDICT item 4): a base under the system
-    # temp dir is a WRITE-side location (streaming sinks, index
-    # scratch) that a query may mutate mid-session — never memoize its
-    # listing, so a re-load always re-lists. Read-only data roots
-    # (the sf dirs) keep the memo.
-    if base.startswith(_TMP_ROOT):
+    if not memoizable(base):
         df = spark.read.parquet(f"{base}/{name}.parquet")
         return normalize_event_time(df, long_unit="ns")
     memo = _TABLE_MEMO.setdefault(spark, {})

@@ -13,6 +13,13 @@ views region/nation/customer/supplier/part/orders/lineitem/events/
 documents/embeddings. Column names are aliased identically on both
 sides (the driver compare sorts columns by name before hashing).
 
+Ordering: a registry row returns an UNORDERED DataFrame; its contract
+is the multiset of rows the oracle compares (row count, schema,
+order-insensitive value hash). A row sorts only where something reads
+the order: a `limit` (top-k), a window, or a driver-side `first()`.
+Rows built on an ordered public API of plans/ or operators/ inherit
+that API's order.
+
 NOTE on `events.ts`: the loader canonicalizes whatever physical
 encoding the parquet carries (long nanos in rounds 1-2, timestamp[us]
 from round 3 — see sources/loader.normalize_event_time) to LONG epoch
@@ -79,10 +86,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # a bound-resolution scalar job, ~0.2-0.3 s of py4j/driver latency per
 # call). Plan metadata only — no .cache(), every action still computes
 # from parquet. Freshness matches load_table's memo (the embedded
-# bound literals froze at first construction); registered with
+# bound literals froze at first construction, and a base that is not
+# sources.loader.memoizable is rebuilt every call); registered with
 # sources.loader.refresh_tables so one hatch invalidates both layers.
 from weakref import WeakKeyDictionary as _WeakKeyDictionary  # noqa: E402
 
+from .sources.loader import memoizable as _memoizable  # noqa: E402
 from .sources.loader import register_plan_memo as _register_plan_memo  # noqa: E402
 
 _QUERY_DF_MEMO: _WeakKeyDictionary = _WeakKeyDictionary()
@@ -90,6 +99,8 @@ _register_plan_memo(_QUERY_DF_MEMO)
 
 
 def _memo_query_df(spark: SparkSession, sf_dir: str, name: str, build):
+    if not _memoizable(sf_dir):
+        return build()
     per = _QUERY_DF_MEMO.setdefault(spark, {})
     key = (name, sf_dir)
     if key not in per:
@@ -248,13 +259,6 @@ def q_latest_per_key(spark, sf_dir):
             F.col("event_id").alias("last_event_id"),
             F.col("value").alias("last_value"),
         )
-        # snapshot-sized output (one row per live series): a global
-        # orderBy would range-shuffle the whole snapshot purely for
-        # presentation (rangepartitioning additionally re-runs the
-        # child plan once to sample bounds). Same call the write path
-        # wants at scale; the driver's value compare is
-        # order-insensitive (json_flatten/locf/event_deltas precedent).
-        .sortWithinPartitions("user_id", "event_type")
     )
 
 
@@ -276,7 +280,6 @@ def q_field_window(spark, sf_dir):
     return (
         ev.filter((F.col("event_type") == "click") & (F.col("value") >= 100.0))
         .select("event_id", _ts_ms().alias("ts_ms"), "user_id", "value")
-        .sortWithinPartitions("event_id")
     )
 
 
@@ -334,7 +337,6 @@ def q_reconstruct_message(spark, sf_dir):
                 F.max_by("value", qualifying), F.lit(-1.0)
             ).alias("value")
         )
-        .orderBy("event_type")
     )
 
 
@@ -360,7 +362,7 @@ def q_anti_join(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     bad = ev.filter((F.col("event_type") == "error") & (F.col("value") > 190.0))
-    return users.join(bad, "user_id", "left_anti").sortWithinPartitions("user_id")
+    return users.join(bad, "user_id", "left_anti")
 
 
 SQL_ANTI_JOIN = """
@@ -385,7 +387,6 @@ def q_semi_join(spark, sf_dir):
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
-        .sortWithinPartitions("user_id")
     )
 
 
@@ -411,12 +412,9 @@ def q_snapshot_diff(spark, sf_dir):
     # snapshots' per-key values in one scan + one exchange (guide
     # §2.4). Equivalence contract (unique event_id per key) holds: the
     # log's event_id is globally unique.
-    # diff rows ≈ every series that changed after the cut —
-    # snapshot-sized at scale, so the global sort is presentation-only
-    # (same class as latest_per_key's)
     return latest_state_sym_diff(
         ev, ["user_id", "event_type"], "event_id", "value", cut
-    ).sortWithinPartitions("user_id", "event_type", "value")
+    )
 
 
 SQL_SNAPSHOT_DIFF = """
@@ -455,13 +453,9 @@ def q_json_flatten(spark, sf_dir):
             F.from_json("props", T.MapType(T.StringType(), T.StringType()))
         ).alias("key", "val_s"),
     )
-    # Full-log-sized output: a global orderBy here would range-shuffle
-    # the entire flattened log purely for presentation (the driver's
-    # value compare is order-insensitive). Within-partition order is
-    # what a write path wants at scale.
     return parsed.select(
         "event_id", "key", F.col("val_s").cast("double").alias("val")
-    ).sortWithinPartitions("event_id", "key")
+    )
 
 
 # DuckDB's json extension (json_each) is not available offline, so the
@@ -488,10 +482,6 @@ def q_locf(spark, sf_dir):
     return (
         locf(marked, ["user_id"], "event_id", "pv", filled_alias="last_purchase_value")
         .select("user_id", "event_id", "last_purchase_value")
-        # already sorted (user_id, event_id) within partitions by the
-        # LOCF window itself; a global orderBy would add a pure
-        # presentation shuffle over the full log
-        .sortWithinPartitions("user_id", "event_id")
     )
 
 
@@ -514,10 +504,6 @@ def q_pivot_matrix(spark, sf_dir):
         ev.groupBy("user_id")
         .pivot("event_type", types)
         .agg(davg(F.col("value")))
-        # one row per user — unbounded at scale; the global orderBy
-        # was presentation-only (order-insensitive compare precedent
-        # as in latest_per_key/json_flatten)
-        .sortWithinPartitions("user_id")
     )
     return out
 
@@ -564,7 +550,6 @@ def q_boundary_padding(spark, sf_dir):
         edge(T_JAN10)
         .unionByName(inside)
         .unionByName(edge(T_JAN15))
-        .sortWithinPartitions("user_id", "ts_ms")
     )
 
 
@@ -615,13 +600,7 @@ def _compacted_as_events(df):
         F.col("src_id").alias("user_id"),
         F.col("uevol_field_id").alias("event_type"),
         F.col("new_value").alias("value"),
-    # full-log-sized output (recent raws ∪ latest older per series): a
-    # global orderBy here range-shuffles the entire compacted log
-    # purely for presentation — and rangepartitioning re-executes the
-    # child (the union + window) once more just to sample bounds.
-    # Within-partition order is what the backup write path wants at
-    # scale; the driver's value compare is order-insensitive.
-    ).sortWithinPartitions("event_id")
+    )
 
 
 def q_compaction(spark, sf_dir):
@@ -682,12 +661,8 @@ def q_sessionization(spark, sf_dir):
     return (
         flagged.groupBy("user_id")
         # the groupBy reuses the lag window's hashpartitioning(user_id)
-        # — no second exchange; a global orderBy would then add a
-        # range shuffle over the per-user output (unbounded at scale)
-        # purely for presentation. Order-insensitive compare precedent
-        # as in latest_per_key/json_flatten.
+        # — no second exchange
         .agg(F.sum("__new").alias("n_sessions"))
-        .sortWithinPartitions("user_id")
     )
 
 
@@ -737,7 +712,6 @@ def q_hll_distinct_users(spark, sf_dir):
                 <= F.col("exact_distinct") * F.lit(rel_bound)
             ).alias("within_bound"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -811,7 +785,6 @@ def q_session_error_counts(spark, sf_dir):
             F.col("b_user").alias("user_id"), "sid", "s_start", "s_end"
         )
         .agg(F.count(F.lit(1)).alias("n_errors"))
-        .sortWithinPartitions("user_id", "sid")
     )
 
 
@@ -845,7 +818,6 @@ def q_interval_event_counts(spark, sf_dir):
         )
         .groupBy("sid", "s_start", "s_end")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .sortWithinPartitions("sid")
     )
 
 
@@ -880,9 +852,6 @@ def q_event_deltas(spark, sf_dir):
                 half_up(F.col("value") - F.col("previous_value"), 2),
             ),
         )
-        # window already leaves (user_id, event_type, event_id) order
-        # within partitions; skip the presentation-only global sort
-        .sortWithinPartitions("user_id", "event_type", "event_id")
     )
 
 
@@ -908,7 +877,7 @@ def q_scd2_intervals(spark, sf_dir):
         F.col("ts").alias("valid_from_ts"),
         F.coalesce(F.lead("ts").over(w), F.lit(-1)).alias("valid_to_ts"),
         "value",
-    ).sortWithinPartitions("user_id", "event_type", "valid_from_id")
+    )
 
 
 SQL_SCD2_INTERVALS = """
@@ -948,7 +917,6 @@ def q_cdc_minimize(spark, sf_dir):
     return (
         flagged.filter(~F.col("is_noop"))
         .select("user_id", "event_type", "event_id", "value")
-        .sortWithinPartitions("user_id", "event_type", "event_id")
     )
 
 
@@ -997,9 +965,6 @@ def q_running_sum(spark, sf_dir):
             "event_id",
             half_up(running, 2).alias("running_value"),
         )
-        # window already leaves (user_id, event_id) order within
-        # partitions; skip the presentation-only global sort
-        .sortWithinPartitions("user_id", "event_id")
     )
 
 
@@ -1032,7 +997,6 @@ def q_global_row_index(spark, sf_dir):
     return (
         global_row_index(ev, ["value", "event_id"], index_col="idx")
         .select("event_id", "idx")
-        .sortWithinPartitions("event_id")
     )
 
 
@@ -1058,7 +1022,6 @@ def q_global_ntile(spark, sf_dir):
     return (
         global_ntile(ev, 100, ["value", "event_id"])
         .select("event_id", "bucket")
-        .sortWithinPartitions("event_id")
     )
 
 
@@ -1084,7 +1047,6 @@ def q_daily_rollup(spark, sf_dir):
             F.countDistinct("user_id").alias("n_users"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
-        .orderBy("day_idx")
     )
 
 
@@ -1149,9 +1111,7 @@ def q_multiple_fields_asof(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     cut = _max_event_id(ev) * 3 // 5
     args = _domain_args(spark, with_filters=False)
-    return get_multiple_fields(_domain_log(ev), args, cut).orderBy(
-        "uevol_field_id", "src_id"
-    )
+    return get_multiple_fields(_domain_log(ev), args, cut)
 
 
 SQL_MULTIPLE_FIELDS_ASOF = """
@@ -1325,7 +1285,6 @@ def q_asof_join_events(spark, sf_dir):
         .select(
             "user_id", "event_id", "value", "signup_event_id", "signup_value"
         )
-        .sortWithinPartitions("user_id", "event_id")
     )
 
 
@@ -1354,7 +1313,8 @@ def q_update_history_dense(spark, sf_dir):
     precedent, r15 §2). No data is cached: every action re-executes
     the full plan from parquet (use_cache=False below — there is no
     .cache() anywhere in it), and refresh_tables() invalidates the
-    memo together with the scan layer."""
+    memo together with the scan layer. A base that is not
+    sources.loader.memoizable (the temp root) is rebuilt every call."""
     return _memo_query_df(
         spark, sf_dir, "update_history_dense",
         lambda: _build_update_history_dense(spark, sf_dir),
@@ -1368,12 +1328,6 @@ def _build_update_history_dense(spark, sf_dir):
     mx = _max_event_id(ev)
     start, end = mx // 5, mx * 3 // 5
     args = _domain_args(spark, with_filters=True)
-    # grid-sized output (time points × series — unbounded at scale):
-    # the final global orderBy was presentation-only, and its
-    # rangepartitioning pays a bounds-sampling re-execution of the
-    # filter-window stage on top of the shuffle itself
-    # (latest_per_key/json_flatten precedent; compare is
-    # order-insensitive).
     # use_cache=False (r15 A/B, the distinctive_terms treatment): the
     # cached base slice is consumed by exactly two aggregating
     # branches whose scans carry the SAME pushed series+id predicates
@@ -1387,7 +1341,7 @@ def _build_update_history_dense(spark, sf_dir):
     # scans of a 100 TB log lose to one materialized slice.
     return get_update_history(
         _domain_log(ev), args, start, end, sort_output=False, use_cache=False
-    ).sortWithinPartitions("uevol_field_id", "src_id", "instance_message_id")
+    )
 
 
 SQL_UPDATE_HISTORY_DENSE = """
@@ -1464,11 +1418,9 @@ def q_update_history_chunked(spark, sf_dir):
     mx = _max_event_id(ev)
     start, end = mx // 10, mx * 9 // 10
     args = _domain_args(spark, with_filters=True)
-    # same presentation-sort removal as q_update_history_dense: the
-    # chunk union is grid-sized, the compare order-insensitive
     return get_update_history_chunked(
         _domain_log(ev), args, start, end, n_chunks=5, sort_output=False
-    ).sortWithinPartitions("uevol_field_id", "src_id", "instance_message_id")
+    )
 
 
 SQL_UPDATE_HISTORY_CHUNKED = SQL_UPDATE_HISTORY_DENSE.replace(
@@ -1496,16 +1448,13 @@ def q_retrieve_field_window(spark, sf_dir):
         uevol_field_id="click",
         start_log_time=T_JAN05,
         end_log_time=T_JAN15,
-        # window-sized output: in-partition order only (the compare is
-        # order-insensitive; a global sort would range-shuffle the
-        # whole window and re-execute the child for bounds sampling)
         sort_output=False,
     )
     return out.select(
         F.col("instance_message_id").alias("event_id"),
         F.col("src_id").alias("user_id"),
         F.col("new_value").alias("value"),
-    ).sortWithinPartitions("event_id")
+    )
 
 
 SQL_RETRIEVE_FIELD_WINDOW = f"""
@@ -1629,9 +1578,7 @@ def q_message_snapshot_delta(spark, sf_dir):
         "id long, uevol_message_id int, src_ty int, src_id int, dst_ty int,"
         " dst_id int, seq_nb int, log_time long, sync_time long",
     )
-    return get_message(log, fields, sidx, srows, msg, at_id).orderBy(
-        "uevol_field_id"
-    )
+    return get_message(log, fields, sidx, srows, msg, at_id)
 
 
 SQL_MESSAGE_SNAPSHOT_DELTA = """
@@ -1682,7 +1629,6 @@ def q_tpch_q1(spark, sf_dir):
             davg(F.col("l_discount"), 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -1776,7 +1722,6 @@ def q_tpch_q5(spark, sf_dir):
                 "revenue"
             )
         )
-        .orderBy(F.col("revenue").desc(), F.col("n_name"))
     )
 
 
@@ -1862,8 +1807,8 @@ def q_tpch_q4(spark, sf_dir):
     1996-07-01, qualifying lineitems need l_shipdate > 1996-07-01 — a
     pushable scan filter the semi-join's residual could never push.
     The aggregated side is unique per orderkey, so inner join ≡ semi
-    join. A/B at sf0.1 (scripts/probe_r16.py): 0.681 vs 0.537 s;
-    multiset-identical, oracle unchanged."""
+    join. A/B at sf0.1 (scripts/probe_r16.py, last in commit f810ddf):
+    0.681 vs 0.537 s; multiset-identical, oracle unchanged."""
     orders = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp_ntz"))
@@ -1879,7 +1824,6 @@ def q_tpch_q4(spark, sf_dir):
         .filter(F.col("__maxship") > F.col("o_orderdate"))
         .groupBy("o_orderpriority")
         .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -1912,7 +1856,6 @@ def q_tpch_q12(spark, sf_dir):
             F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
             F.sum(F.when(high, 0).otherwise(1)).alias("low_line_count"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -2167,7 +2110,6 @@ def q_tpch_q7(spark, sf_dir):
                 "revenue"
             )
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -2224,7 +2166,6 @@ def q_tpch_q8(spark, sf_dir):
         .agg(
             half_up(_dsum_parts(nat) / _dsum_parts(vol), 4).alias("mkt_share")
         )
-        .orderBy("o_year")
     )
 
 
@@ -2279,7 +2220,6 @@ def q_tpch_q9(spark, sf_dir):
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
         .agg(dsum(profit).alias("sum_profit"))
-        .orderBy("nation", F.col("o_year").desc())
     )
 
 
@@ -2325,7 +2265,6 @@ def q_tpch_q11(spark, sf_dir):
         .select(
             "ps_partkey", (F.col("val_c") / F.lit(100.0)).alias("part_value")
         )
-        .sortWithinPartitions(F.col("part_value").desc(), "ps_partkey")
     )
 
 
@@ -2362,7 +2301,6 @@ def q_tpch_q13(spark, sf_dir):
     return (
         c_orders.groupBy("c_count")
         .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
     )
 
 
@@ -2406,7 +2344,6 @@ def q_tpch_q15(spark, sf_dir):
     return (
         supp.join(F.broadcast(top), supp.s_suppkey == top.supplier_no)
         .select("s_suppkey", "s_name", "total_revenue")
-        .orderBy("s_suppkey")
     )
 
 
@@ -2450,9 +2387,6 @@ def q_tpch_q16(spark, sf_dir):
         .join(F.broadcast(part), bridge.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(
-            F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size"
-        )
     )
 
 
@@ -2542,7 +2476,6 @@ def q_tpch_q20(spark, sf_dir):
             "left_semi",
         )
         .select("s_name", "s_acctbal")
-        .sortWithinPartitions("s_name")
     )
 
 
@@ -2660,7 +2593,6 @@ def q_tpch_q22(spark, sf_dir):
             F.count(F.lit(1)).alias("numcust"),
             dsum(F.col("c_acctbal")).alias("totacctbal"),
         )
-        .orderBy("cntrycode")
     )
 
 
@@ -2701,7 +2633,6 @@ def q_cube_events(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             dsum(F.col("value")).alias("sum_value"),
         )
-        .orderBy("event_type", "dow_idx")
     )
 
 
@@ -2723,7 +2654,6 @@ def q_topk_per_group(spark, sf_dir):
         part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
         .select("p_brand", "p_partkey", "p_retailprice", "rank")
-        .orderBy("p_brand", "rank")
     )
 
 
@@ -2747,7 +2677,6 @@ def q_distinct_agg(spark, sf_dir):
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 2).alias("sum_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2767,7 +2696,7 @@ def q_unpivot_lineitem(spark, sf_dir):
         "l_linenumber",
         "stack(3, 'quantity', l_quantity, 'extendedprice', l_extendedprice,"
         " 'discount', l_discount) AS (measure, val)",
-    ).sortWithinPartitions("l_orderkey", "l_linenumber", "measure")
+    )
 
 
 SQL_UNPIVOT_LINEITEM = """
@@ -2842,7 +2771,7 @@ def q_approx_stats(spark, sf_dir):
             (F.col("le95") >= (0.95 - delta) * F.col("n"))
             & (F.col("lt95") <= (0.95 + delta) * F.col("n"))
         ).alias("p95_ok"),
-    ).orderBy("event_type")
+    )
 
 
 SQL_APPROX_STATS = """
@@ -2886,7 +2815,6 @@ def q_exact_quantiles(spark, sf_dir):
                 )
             ).alias("p95"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2914,7 +2842,6 @@ def q_rollup(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("o_totalprice"), 2).alias("total"),
         )
-        .orderBy("o_orderstatus", "o_orderpriority")
     )
 
 
@@ -2935,9 +2862,6 @@ def q_dedup_exact(spark, sf_dir):
     return (
         dedup_exact(docs, "text", "doc_id")
         .select("doc_id")
-        # survivor set is corpus-sized; global orderBy was
-        # presentation-only (order-insensitive compare precedent)
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -2952,7 +2876,7 @@ def q_word_jaccard_pairs(spark, sf_dir):
     out = ngram_jaccard_pairs(docs, "text", "doc_id", n=1, threshold=0.8)
     return out.select(
         "a", "b", half_up(F.col("jaccard"), 6).alias("jaccard")
-    ).sortWithinPartitions("a", "b")
+    )
 
 
 SQL_WORD_JACCARD_PAIRS = r"""
@@ -2990,7 +2914,7 @@ def q_winnow_fingerprints(spark, sf_dir):
         F.size("fps").alias("n_fps"),
         F.array_min("fps").alias("min_fp"),
         F.array_max("fps").alias("max_fp"),
-    ).sortWithinPartitions("doc")
+    )
 
 
 SQL_WINNOW_FINGERPRINTS = r"""
@@ -3039,7 +2963,7 @@ def q_winnow_overlap_pairs(spark, sf_dir):
     )
     return out.select(
         "a", "b", "shared", half_up(F.col("overlap"), 6).alias("overlap")
-    ).sortWithinPartitions("a", "b")
+    )
 
 
 SQL_WINNOW_OVERLAP_PAIRS = r"""
@@ -3092,7 +3016,7 @@ def q_triangle_counts(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 10 == 0)
     edges = cooccurrence_edges(li, "l_orderkey", "l_partkey")
-    return triangle_counts(edges).sortWithinPartitions("v")
+    return triangle_counts(edges)
 
 
 SQL_TRIANGLE_COUNTS = """
@@ -3154,7 +3078,7 @@ def q_agg_maintenance(spark, sf_dir):
         "event_type",
         "cnt",
         (F.col("total") / 100.0).alias("sum_value"),
-    ).sortWithinPartitions("user_id", "event_type")
+    )
 
 
 SQL_AGG_MAINTENANCE = """
@@ -3244,7 +3168,7 @@ def q_ivm_bucketed_persisted(spark, sf_dir):
         "event_type",
         "cnt",
         (F.col("total") / 100.0).alias("sum_value"),
-    ).sortWithinPartitions("user_id", "event_type")
+    )
 
 
 def q_fuzzy_pairs(spark, sf_dir):
@@ -3258,10 +3182,7 @@ def q_fuzzy_pairs(spark, sf_dir):
     from .operators.fuzzy import fuzzy_pairs
 
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 2000)
-    return (
-        fuzzy_pairs(cust, "c_custkey", "c_name", max_dist=1)
-        .sortWithinPartitions("a", "b")
-    )
+    return fuzzy_pairs(cust, "c_custkey", "c_name", max_dist=1)
 
 
 SQL_FUZZY_PAIRS = """
@@ -3295,7 +3216,7 @@ def q_winnow_overlap_capped(spark, sf_dir):
     )
     return out.select(
         "a", "b", "shared", half_up(F.col("overlap"), 6).alias("overlap")
-    ).sortWithinPartitions("a", "b")
+    )
 
 
 SQL_WINNOW_OVERLAP_CAPPED = r"""
@@ -3348,10 +3269,7 @@ def q_fuzzy_pairs_d2(spark, sf_dir):
     from .operators.fuzzy import fuzzy_pairs
 
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 1000)
-    return (
-        fuzzy_pairs(cust, "c_custkey", "c_name", max_dist=2)
-        .sortWithinPartitions("a", "b")
-    )
+    return fuzzy_pairs(cust, "c_custkey", "c_name", max_dist=2)
 
 
 SQL_FUZZY_PAIRS_D2 = """
@@ -3377,7 +3295,7 @@ def q_decontamination(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     corpus = docs.filter(F.col("doc_id") % 97 != 0)
-    return benchmark_contamination(corpus, bench, n=3).sortWithinPartitions("doc_id")
+    return benchmark_contamination(corpus, bench, n=3)
 
 
 SQL_DECONTAMINATION = r"""
@@ -3414,7 +3332,7 @@ def q_pii_scan(spark, sf_dir):
             for name in PII_PATTERNS
         ],
         F.col("n_pii_total").cast("long").alias("n_pii_total"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 def _sql_pii() -> str:
@@ -3451,7 +3369,7 @@ def q_doc_chunks(spark, sf_dir):
         F.col("chunk_id").cast("long").alias("chunk_id"),
         F.col("n_chunk_tokens").cast("long").alias("n_chunk_tokens"),
         "chunk_text",
-    ).sortWithinPartitions("doc_id", "chunk_id")
+    )
 
 
 SQL_DOC_CHUNKS = r"""
@@ -3493,7 +3411,6 @@ def q_chunk_dedup(spark, sf_dir):
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum(F.col("is_dup").cast("long")).alias("n_dup_chunks"),
         )
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -3542,7 +3459,7 @@ def q_domain_cap(spark, sf_dir):
         "doc_id",
         F.col("n_chars").cast("long").alias("n_chars"),
         F.col("rk").cast("long").alias("rk"),
-    ).sortWithinPartitions("source", "rk")
+    )
 
 
 SQL_DOMAIN_CAP = """
@@ -3566,7 +3483,7 @@ def q_corpus_shuffle(spark, sf_dir):
     out = deterministic_shuffle(docs, "doc_id")
     return out.select(
         "shard", F.col("pos").cast("long").alias("pos"), "doc_id"
-    ).sortWithinPartitions("shard", "pos")
+    )
 
 
 SQL_CORPUS_SHUFFLE = """
@@ -3599,7 +3516,7 @@ def q_passage_dedup(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return passage_dup_stats(
         docs, "text", "doc_id", k=8, min_docs=2, hashed=False
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_PASSAGE_DEDUP = r"""
@@ -3666,7 +3583,7 @@ def q_kmeans(spark, sf_dir):
         F.col("embedding").cast("array<double>").alias("cv"),
     )
     assign, _cents = kmeans(emb, init, n_iters=2)
-    return assign.sortWithinPartitions("vec_id")
+    return assign
 
 
 def _kmeans_oracle_sql(k: int = 8, n_iters: int = 2, dim: int = 64,
@@ -3756,9 +3673,7 @@ def q_semantic_dedup(spark, sf_dir):
         F.col("vec_id").cast("int").alias("cid"),
         F.col("embedding").cast("array<double>").alias("cv"),
     )
-    return semantic_dedup(emb, init, threshold=0.4, n_iters=2).sortWithinPartitions(
-        "vec_id"
-    )
+    return semantic_dedup(emb, init, threshold=0.4, n_iters=2)
 
 
 def _semdedup_prune_ctes(
@@ -3818,7 +3733,7 @@ def q_semantic_dedup_routed(spark, sf_dir):
     )
     return routed_semantic_dedup(
         emb, init, n_coarse=2, threshold=0.4
-    ).sortWithinPartitions("vec_id")
+    )
 
 
 def _sql_d2(a: str, b: str, dim: int) -> str:
@@ -3937,9 +3852,7 @@ def q_semantic_dedup_routed_eval(spark, sf_dir):
         F.col("vec_id").cast("int").alias("cid"),
         F.col("embedding").cast("array<double>").alias("cv"),
     )
-    return routed_dedup_eval(emb, init, n_coarse=2, threshold=0.4).orderBy(
-        "cid"
-    )
+    return routed_dedup_eval(emb, init, n_coarse=2, threshold=0.4)
 
 
 def _routed_eval_oracle_sql(
@@ -4045,7 +3958,7 @@ def q_incremental_semantic_dedup(spark, sf_dir):
     new_shard = emb.filter(F.col("vec_id") % 4 == 0)
     return incremental_semantic_dedup(
         spark, new_shard, index_path, threshold=0.4
-    ).sortWithinPartitions("vec_id")
+    )
 
 
 def _inc_sql_pieces(dim: int, threshold: str):
@@ -4169,7 +4082,7 @@ def q_incremental_semantic_dedup_routed(spark, sf_dir):
     new_shard = emb.filter(F.col("vec_id") % 4 == 0)
     return routed_incremental_semantic_dedup(
         spark, new_shard, index_path, n_coarse=2, threshold=0.4
-    ).sortWithinPartitions("vec_id")
+    )
 
 
 def _routed_incremental_oracle_sql(
@@ -4272,7 +4185,6 @@ def q_semantic_index_append(spark, sf_dir):
     return (
         out_a.withColumn("shard", F.lit("a"))
         .unionByName(out_b.withColumn("shard", F.lit("b")))
-        .sortWithinPartitions("vec_id")
     )
 
 
@@ -4469,7 +4381,6 @@ def q_semantic_index_compacted(spark, sf_dir):
     return (
         out_a.withColumn("shard", F.lit("a"))
         .unionByName(out_b.withColumn("shard", F.lit("b")))
-        .sortWithinPartitions("vec_id")
     )
 
 
@@ -4508,7 +4419,7 @@ def q_routed_incremental_eval(spark, sf_dir):
     new_shard = emb.filter(F.col("vec_id") % 4 == 0)
     return routed_incremental_eval(
         spark, new_shard, index_path, n_coarse=2, threshold=0.4
-    ).orderBy("cid")
+    )
 
 
 def _routed_incremental_eval_oracle_sql(
@@ -4611,8 +4522,7 @@ def q_bm25_retrieval(spark, sf_dir):
     queries = docs.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
     )
-    out = bm25_topk(docs, queries, k=10)
-    return out.orderBy("query_id", "rank")
+    return bm25_topk(docs, queries, k=10)
 
 
 SQL_BM25_RETRIEVAL = r"""
@@ -4697,7 +4607,7 @@ def q_pq_topk(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    return pq_topk(codes, books, queries, k=10).orderBy("query_id", "rank")
+    return pq_topk(codes, books, queries, k=10)
 
 
 def q_pq_rerank_topk(spark, sf_dir):
@@ -4728,7 +4638,7 @@ def q_pq_rerank_topk(spark, sf_dir):
         "vec_id",
         half_up(F.col("cosine"), 6).alias("cosine"),
         "rank",
-    ).orderBy("query_id", "rank")
+    )
 
 
 def q_pq_recall_eval(spark, sf_dir):
@@ -4800,7 +4710,6 @@ def q_pq_recall_eval(spark, sf_dir):
                 F.coalesce(F.col("__hr"), F.lit(0)) * F.lit(unit)
             ).cast("long").alias("recall_rerank_micro"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -4832,8 +4741,7 @@ def q_bm25_persisted(spark, sf_dir):
     queries = docs.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
     )
-    out = bm25_topk(docs, queries, k=10, index=read_bm25_index(spark, path))
-    return out.orderBy("query_id", "rank")
+    return bm25_topk(docs, queries, k=10, index=read_bm25_index(spark, path))
 
 
 def q_bm25_index_append(spark, sf_dir):
@@ -4883,8 +4791,7 @@ def q_bm25_index_append(spark, sf_dir):
     queries = docs.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
     )
-    out = bm25_topk(docs, queries, k=10, index=read_bm25_index(spark, path))
-    return out.orderBy("query_id", "rank")
+    return bm25_topk(docs, queries, k=10, index=read_bm25_index(spark, path))
 
 
 
@@ -4939,8 +4846,7 @@ def q_bm25_index_compacted(spark, sf_dir):
     queries = docs.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
     )
-    out = bm25_topk(docs, queries, k=10, index=read_bm25_index(spark, path))
-    return out.orderBy("query_id", "rank")
+    return bm25_topk(docs, queries, k=10, index=read_bm25_index(spark, path))
 
 
 
@@ -4988,10 +4894,9 @@ def q_bm25_delete(spark, sf_dir):
         F.col("doc_id").alias("query_id"),
         F.col("text").alias("query_text"),
     )
-    out = bm25_topk(
+    return bm25_topk(
         docs, queries, k=10, index=read_bm25_index(spark, path)
     )
-    return out.orderBy("query_id", "rank")
 
 
 def q_bm25_delete_purged(spark, sf_dir):
@@ -5032,10 +4937,9 @@ def q_bm25_delete_purged(spark, sf_dir):
         F.col("doc_id").alias("query_id"),
         F.col("text").alias("query_text"),
     )
-    out = bm25_topk(
+    return bm25_topk(
         docs, queries, k=10, index=read_bm25_index(spark, path)
     )
-    return out.orderBy("query_id", "rank")
 
 
 def q_phrase_delete(spark, sf_dir):
@@ -5073,7 +4977,6 @@ def q_phrase_delete(spark, sf_dir):
     return (
         phrase_search(idx, "table hash")
         .select(F.col("doc").alias("doc_id"), "n_matches")
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -5151,7 +5054,7 @@ def q_pq_delete(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    return pq_topk(rc, rb, queries, k=10).orderBy("query_id", "rank")
+    return pq_topk(rc, rb, queries, k=10)
 
 
 def q_stream_index_ingest(spark, sf_dir):
@@ -5436,7 +5339,6 @@ def q_stream_semantic_ingest(spark, sf_dir):
     return (
         read_index_ingest_pairs(spark, pairs_sink)
         .select("vec_id", "cid", "kept")
-        .sortWithinPartitions("vec_id")
     )
 
 
@@ -5526,10 +5428,9 @@ def q_stream_bm25_ingest(spark, sf_dir):
         F.col("doc_id").alias("query_id"),
         F.col("text").alias("query_text"),
     )
-    out = bm25_topk(
+    return bm25_topk(
         docs, queries, k=10, index=read_bm25_index(spark, index_path)
     )
-    return out.orderBy("query_id", "rank")
 
 
 def q_stream_winnow_ingest(spark, sf_dir):
@@ -5622,7 +5523,6 @@ def q_stream_winnow_ingest(spark, sf_dir):
             "shared",
             half_up(F.col("overlap"), 6).alias("overlap"),
         )
-        .sortWithinPartitions("a", "b")
     )
 
 
@@ -5780,7 +5680,6 @@ def q_stream_positional_ingest(spark, sf_dir):
     return (
         phrase_search(idx, "table hash")
         .select(F.col("doc").alias("doc_id"), "n_matches")
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -5915,7 +5814,7 @@ def q_stream_pq_ingest(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    return pq_topk(rc, rb, queries, k=10).orderBy("query_id", "rank")
+    return pq_topk(rc, rb, queries, k=10)
 
 
 def q_hybrid_persisted(spark, sf_dir):
@@ -5963,7 +5862,7 @@ def q_hybrid_persisted(spark, sf_dir):
     dense = search_ivf_index(
         spark, ivf_path, qvec, k=20, nprobe=16
     ).select("query_id", F.col("vec_id").alias("doc"), "rank")
-    return rrf_fuse([sparse, dense], k=10).orderBy("query_id", "rank")
+    return rrf_fuse([sparse, dense], k=10)
 
 
 
@@ -6071,7 +5970,7 @@ def q_winnow_index_append(spark, sf_dir):
     out = pairs_a.unionByName(pairs_b)
     return out.select(
         "a", "b", "shared", half_up(F.col("overlap"), 6).alias("overlap")
-    ).sortWithinPartitions("a", "b")
+    )
 
 
 SQL_WINNOW_INDEX_APPEND = r"""
@@ -6415,7 +6314,7 @@ def q_pq_index_append(spark, sf_dir):
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    return pq_topk(rc, rb, queries, k=10).orderBy("query_id", "rank")
+    return pq_topk(rc, rb, queries, k=10)
 
 
 def q_positional_index_append(spark, sf_dir):
@@ -6458,7 +6357,6 @@ def q_positional_index_append(spark, sf_dir):
     return (
         phrase_search(idx, "table hash")
         .select(F.col("doc").alias("doc_id"), "n_matches")
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -6475,7 +6373,7 @@ def q_repetition_scores(spark, sf_dir):
         F.col("n_grams").cast("long").alias("n_grams"),
         F.col("n_distinct_grams").cast("long").alias("n_distinct_grams"),
         "dup_frac",
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_REPETITION_SCORES = r"""
@@ -6509,7 +6407,6 @@ def q_dedup_clusters(spark, sf_dir):
     return (
         connected_components(pairs, vertices=docs, vertex_col="doc_id")
         .select(F.col("v").alias("doc_id"), "cluster")
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -6549,7 +6446,6 @@ def q_dedup_corpus(spark, sf_dir):
     return (
         dedup_corpus(docs, pairs, "doc_id")
         .select("doc_id", F.length("text").alias("text_len"))
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -6597,7 +6493,6 @@ def q_dedup_corpus_best(spark, sf_dir):
     return (
         dedup_corpus(docs, pairs, "doc_id", prefer_col="n_chars")
         .select("doc_id", "n_chars")
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -6654,7 +6549,6 @@ def q_train_split(spark, sf_dir):
             F.min("doc_id").alias("min_id"),
             F.max("doc_id").alias("max_id"),
         )
-        .orderBy("split")
     )
 
 
@@ -6703,7 +6597,6 @@ def q_token_rarity(spark, sf_dir):
                 "mean_term_freq"
             ),
         )
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -6743,7 +6636,7 @@ def q_lm_perplexity(spark, sf_dir):
         "n_bigrams",
         "n_unseen",
         half_up(F.col("avg_nll"), 6).alias("avg_nll"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_LM_PERPLEXITY = r"""
@@ -6821,7 +6714,7 @@ def q_repetition_stats(spark, sf_dir):
         .alias("top_frac"),
         half_up(F.col("dup_grams") / F.nullif(F.col("n_grams"), F.lit(0)), 4)
         .alias("dup_frac"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_REPETITION_STATS = r"""
@@ -6884,7 +6777,7 @@ def q_repeated_spans(spark, sf_dir):
         half_up(
             F.col("covered_chars") / F.nullif(F.col("n_chars"), F.lit(0)), 4
         ).alias("dup_char_frac"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_REPEATED_SPANS = r"""
@@ -6943,7 +6836,7 @@ def q_mixture_sample(spark, sf_dir):
     out = mixture_sample(
         docs, "source", {"src0": 40, "src1": 25, "src2": 15}, "doc_id"
     )
-    return out.select("source", "doc_id").sortWithinPartitions("source", "doc_id")
+    return out.select("source", "doc_id")
 
 
 SQL_MIXTURE_SAMPLE = """
@@ -6984,7 +6877,7 @@ def q_histogram_quantiles(spark, sf_dir):
         "event_type",
         half_up(F.col("q"), 2).alias("q"),
         half_up(F.col("est"), 2).alias("est"),
-    ).orderBy("event_type", "q")
+    )
 
 
 SQL_HISTOGRAM_QUANTILES = """
@@ -7056,7 +6949,6 @@ def q_incremental_dedup(spark, sf_dir):
         .join(tb, "b")
         .filter(F.col("__ta") == F.col("__tb"))
         .select("a", "b")
-        .sortWithinPartitions("a", "b")
     )
 
 
@@ -7110,7 +7002,6 @@ def q_incremental_simhash(spark, sf_dir):
         .join(tb, "b")
         .filter(F.col("__ta") == F.col("__tb"))
         .select("a", "b")
-        .sortWithinPartitions("a", "b")
     )
 
 
@@ -7128,7 +7019,6 @@ def _verified_text_pairs(pairs, all_docs):
         .join(tb, "b")
         .filter(F.col("__ta") == F.col("__tb"))
         .select("a", "b")
-        .sortWithinPartitions("a", "b")
     )
 
 
@@ -7276,7 +7166,7 @@ def q_mean_embedding(spark, sf_dir):
         F.col("label").cast("long").alias("label"),
         F.col("pos").cast("long").alias("pos"),
         half_up(F.col("mean_val"), 6).alias("mean_val"),
-    ).orderBy("label", "pos")
+    )
 
 
 SQL_MEAN_EMBEDDING = """
@@ -7344,7 +7234,6 @@ def q_stratified_sample(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.sum(F.length("text")).alias("sum_len"),
         )
-        .orderBy("lang")
     )
 
 
@@ -7395,13 +7284,6 @@ def q_distinctive_terms(spark, sf_dir):
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 3)
         .select("doc_id", "rank", "term", "tf", "df")
-        # top-3 rows PER DOCUMENT — corpus-sized output; the global
-        # orderBy was presentation-only and its rangepartitioning
-        # bounds-sampling re-executed the window stage (A/B at sf0.1:
-        # 2.09 s with orderBy vs 1.41 s without, same session).
-        # Order-insensitive compare precedent (latest_per_key/
-        # json_flatten).
-        .sortWithinPartitions("doc_id", "rank")
     )
 
 
@@ -7458,7 +7340,6 @@ def q_corpus_pipeline(spark, sf_dir):
             F.min("doc_id").alias("min_id"),
             F.max("doc_id").alias("max_id"),
         )
-        .orderBy("split")
     )
 
 
@@ -7526,7 +7407,6 @@ def q_sequence_pack(spark, sf_dir):
             F.sum("tok").alias("sum_tokens"),
             F.min("doc_id").alias("first_doc"),
         )
-        .sortWithinPartitions("shard", "bin")
     )
 
 
@@ -7576,12 +7456,7 @@ def q_text_stats(spark, sf_dir):
         doc_fingerprint(F.col("text"), t).alias("fingerprint"),
         quality_score(F.col("text"), t).alias("quality"),
         language_id(F.col("text"), t).alias("lang_pred"),
-        # one row per document — corpus-sized; the global orderBy was
-        # presentation-only: it range-shuffled every per-doc stat row
-        # AND its bounds sampling re-ran the heavy tokenize/score
-        # stage once more (latest_per_key/json_flatten precedent;
-        # compare is order-insensitive)
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 def _sql_markers(code: str) -> str:
@@ -7635,7 +7510,7 @@ def q_token_estimate(spark, sf_dir):
             "n_pieces"
         ),
         (F.length("text") / F.lit(4)).cast("long").alias("chars_div4"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_TOKEN_ESTIMATE = """
@@ -7751,7 +7626,7 @@ def q_image_features(spark, sf_dir):
         "width",
         "height",
         F.round("mean_luma", 6).alias("mean_luma"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_IMAGE_FEATURES = """
@@ -7809,7 +7684,7 @@ def q_image_resize(spark, sf_dir):
         "width",
         "height",
         F.round("mean_luma", 6).alias("mean_luma"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 # the oracle mirrors the decoder's float expression token-for-token
@@ -7883,14 +7758,13 @@ def q_audio_resample(spark, sf_dir):
         F.lit(-1).cast("long").alias("n_samples"),
         F.lit(-1.0).alias("rms"),
     )
-    out = valid.select(
+    return valid.select(
         "doc_id",
         "n_bytes",
         "sample_rate",
         "n_samples",
         F.round("rms", 6).alias("rms"),
     ).unionByName(sentinels)
-    return out.sortWithinPartitions("doc_id")
 
 
 # the oracle mirrors the decoder's float expression token-for-token:
@@ -7965,7 +7839,6 @@ def q_stream_latest_state(spark, sf_dir):
             "last_update_id",
             F.col("current_value").alias("value"),
         )
-        .sortWithinPartitions("user_id", "event_type")
     )
 
 
@@ -8027,7 +7900,6 @@ def q_stream_sink_exactly_once(spark, sf_dir):
             "last_update_id",
             F.col("current_value").alias("value"),
         )
-        .sortWithinPartitions("user_id", "event_type")
     )
 
 
@@ -8077,7 +7949,6 @@ def q_stream_windowed_counts(spark, sf_dir):
                 hi.cast("double") + lo.cast("double") / F.lit(float(_FRAC)), 2
             ).alias("sum_value"),
         )
-        .orderBy("day", "event_type")
     )
 
 
@@ -8134,7 +8005,6 @@ def q_stream_sessionization(spark, sf_dir):
         spark.table(name)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
-        .sortWithinPartitions("user_id")
     )
 
 
@@ -8167,7 +8037,7 @@ def q_stream_dedup(spark, sf_dir):
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("stream_dedup did not drain in 300s")
-    return spark.table(name).sortWithinPartitions("user_id", "event_type")
+    return spark.table(name)
 
 
 SQL_STREAM_DEDUP = """
@@ -8231,7 +8101,6 @@ def q_stream_attribution(spark, sf_dir):
         .select(
             F.col("c_user").alias("user_id"), "click_id", "purchase_id"
         )
-        .sortWithinPartitions("user_id", "click_id", "purchase_id")
     )
 
 
@@ -8260,7 +8129,7 @@ def q_audio_features(spark, sf_dir):
         "sample_rate",
         "n_samples",
         F.round("rms", 6).alias("rms"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_AUDIO_FEATURES = """
@@ -8292,7 +8161,6 @@ def q_frame_sample(spark, sf_dir):
             F.sum("frame_idx").alias("sum_idx"),
             F.sum(F.octet_length("frame_bytes")).alias("sum_bytes"),
         )
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -8328,7 +8196,7 @@ def q_minhash_signatures(spark, sf_dir):
     sig = minhash_signatures_portable(
         docs, "text", "doc_id", n=3, num_hashes=8
     )
-    return sig.orderBy("doc")
+    return sig
 
 
 SQL_MINHASH_SIGNATURES = r"""
@@ -8364,7 +8232,7 @@ def q_simhash_fingerprints(spark, sf_dir):
     from .operators.dedup import simhash_portable
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return simhash_portable(docs, "text", "doc_id", bits=32).sortWithinPartitions("doc")
+    return simhash_portable(docs, "text", "doc_id", bits=32)
 
 
 def _simhash_oracle_sql(bits: int = 32) -> str:
@@ -8405,10 +8273,9 @@ def q_embedding_dup_pairs(spark, sf_dir):
     from .operators.dedup import embedding_dup_pairs_portable
 
     emb = _t(spark, sf_dir, "embeddings")
-    out = embedding_dup_pairs_portable(
+    return embedding_dup_pairs_portable(
         emb, "embedding", "vec_id", dim=64, threshold=0.2, planes=6
     )
-    return out.sortWithinPartitions("a", "b")
 
 
 def _embedding_dup_oracle_sql() -> str:
@@ -8723,7 +8590,6 @@ def q_salted_join(spark, sf_dir):
             F.count(F.lit(1)).alias("n"),
             F.sum("v_milli").alias("sum_v_milli"),
         )
-        .orderBy("c_mktsegment", "event_type")
     )
 
 
@@ -8768,7 +8634,7 @@ def q_salted_agg(spark, sf_dir):
             "v_milli"
         ),
     )
-    out = salted_agg(
+    return salted_agg(
         ev,
         ["user_id", "event_type", "day"],
         {
@@ -8780,7 +8646,6 @@ def q_salted_agg(spark, sf_dir):
         n_salts=8,
         salt_cols=["event_id"],
     )
-    return out.sortWithinPartitions("user_id", "event_type", "day")
 
 
 SQL_SALTED_AGG = """
@@ -8831,7 +8696,7 @@ def q_skewed_latest(spark, sf_dir):
         "series",
         F.col("event_id").alias("last_event_id"),
         F.col("value").alias("last_value"),
-    ).sortWithinPartitions("series")
+    )
 
 
 SQL_SKEWED_LATEST = """
@@ -8904,7 +8769,6 @@ def q_bucketed_join_persisted(spark, sf_dir):
             F.count(F.lit(1)).alias("n_orders"),
             F.sum("price_cents").alias("sum_price_cents"),
         )
-        .sortWithinPartitions("custkey", "c_mktsegment")
     )
 
 
@@ -9034,7 +8898,6 @@ def q_stream_late_data(spark, sf_dir):
             "n",
             "sum_v_milli",
         )
-        .orderBy("window_start_ms", "event_type")
     )
 
 
@@ -9302,7 +9165,7 @@ def q_stream_join_outer(spark, sf_dir):
         "r_event_id",
         "r_ts_ms",
         "r_v_milli",
-    ).sortWithinPartitions("l_event_id", "r_event_id")
+    )
 
 
 # the oracle replays the two measured outer-join watermark rules as
@@ -9368,7 +9231,7 @@ def q_stream_join_full_outer(spark, sf_dir):
         "r_event_id",
         "r_ts_ms",
         "r_v_milli",
-    ).sortWithinPartitions("l_event_id", "r_event_id")
+    )
 
 
 SQL_STREAM_JOIN_FULL_OUTER = """
@@ -9486,7 +9349,7 @@ def q_stream_quota(spark, sf_dir):
         raise TimeoutError("stream_quota did not drain in 300s")
     return spark.table(name).select(
         "user_id", "event_id", "event_type", "v_cents", "quota_rank"
-    ).sortWithinPartitions("user_id", "event_id")
+    )
 
 
 SQL_STREAM_QUOTA = """
@@ -9559,7 +9422,7 @@ def q_merge_apply(spark, sf_dir):
         "event_type",
         F.col("event_id").alias("last_event_id"),
         F.col("v_cents").alias("last_v_cents"),
-    ).sortWithinPartitions("user_id", "event_type")
+    )
 
 
 def q_merge_apply_broadcast(spark, sf_dir):
@@ -9612,7 +9475,7 @@ def q_merge_apply_broadcast(spark, sf_dir):
         "event_type",
         F.col("event_id").alias("last_event_id"),
         F.col("v_cents").alias("last_v_cents"),
-    ).sortWithinPartitions("user_id", "event_type")
+    )
 
 
 SQL_MERGE_APPLY = """
@@ -9758,7 +9621,6 @@ def q_stream_cdc_apply(spark, sf_dir):
             F.col("event_id").alias("last_event_id"),
             F.col("v_cents").alias("last_v_cents"),
         )
-        .sortWithinPartitions("user_id", "event_type")
     )
 
 
@@ -9850,7 +9712,6 @@ def q_ivm_time_travel(spark, sf_dir):
             "cnt",
             (F.col("total") / 100.0).alias("sum_value"),
         )
-        .sortWithinPartitions("user_id", "event_type")
     )
 
 
@@ -9971,7 +9832,6 @@ def q_stream_agg_maintenance(spark, sf_dir):
             "cnt",
             (F.col("total") / 100.0).alias("sum_value"),
         )
-        .sortWithinPartitions("user_id", "event_type")
     )
 
 
@@ -10014,7 +9874,7 @@ def q_ohlc_bars(spark, sf_dir):
         "close",
         "n",
         F.col("sum_value").alias("sum_cents"),
-    ).sortWithinPartitions("user_id", "event_type", "bucket_start_ms")
+    )
 
 
 SQL_OHLC_BARS = """
@@ -10081,7 +9941,6 @@ def q_partitioned_ingest(spark, sf_dir):
             F.sum("v_cents").alias("sum_cents"),
             F.countDistinct("user_id").alias("n_users"),
         )
-        .orderBy("day", "event_type")
     )
 
 
@@ -10147,7 +10006,6 @@ def q_latest_bucketed_persisted(spark, sf_dir):
                 ),
             ).alias("last_value"),
         )
-        .sortWithinPartitions("uevol_field_id", "src_id")
     )
 
 
@@ -10264,7 +10122,6 @@ def q_stream_latest_ttl(spark, sf_dir):
             "n_updates_total",
             "last_update_id",
         )
-        .sortWithinPartitions("uevol_field_id")
     )
 
 
@@ -10461,7 +10318,7 @@ def q_heavy_hitters(spark, sf_dir):
         "exact_count",
         (F.col("est_count") >= F.col("exact_count")).alias("no_underestimate"),
         F.row_number().over(w).alias("rank"),
-    ).orderBy("rank")
+    )
 
 
 def _heavy_hitters_oracle_sql(depth: int = 4, width: int = 256) -> str:
@@ -10529,9 +10386,7 @@ def q_zorder_locality(spark, sf_dir):
         F.pmod(F.col("user_id"), F.lit(65536)).alias("a"),
         F.pmod(F.floor(_ts_ms() / F.lit(60000.0)), F.lit(65536)).alias("b"),
     )
-    return zorder_locality_stats(ev, "a", "b", bits=16, bucket_shift=22).orderBy(
-        "zbucket"
-    )
+    return zorder_locality_stats(ev, "a", "b", bits=16, bucket_shift=22)
 
 
 def _zorder_oracle_sql() -> str:
@@ -10579,7 +10434,7 @@ def q_hybrid_rrf(spark, sf_dir):
     dense = cosine_topk(emb, qvec, k=20).select(
         "query_id", F.col("vec_id").alias("doc"), "rank"
     )
-    return rrf_fuse([sparse, dense], k=10).orderBy("query_id", "rank")
+    return rrf_fuse([sparse, dense], k=10)
 
 
 SQL_HYBRID_RRF = r"""
@@ -10687,7 +10542,7 @@ def q_quality_classifier(spark, sf_dir):
         F.col("id").alias("doc_id"),
         "logit_milli",
         (F.col("logit_milli") >= 0).alias("keep"),
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 def _quality_classifier_oracle_sql(n_buckets: int = 4096) -> str:
@@ -10786,7 +10641,6 @@ def q_embargo_split(spark, sf_dir):
             F.min("ts_ms").alias("min_ts"),
             F.max("ts_ms").alias("max_ts"),
         )
-        .orderBy("split")
     )
 
 
@@ -10820,7 +10674,6 @@ def q_event_transitions(spark, sf_dir):
         .filter(F.col("from_type").isNotNull())
         .groupBy("from_type", F.col("event_type").alias("to_type"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("from_type", "to_type")
     )
 
 
@@ -10908,7 +10761,7 @@ def q_collocations(spark, sf_dir):
     w = Window.orderBy(
         F.col("lift_micro").desc(), F.col("a").asc(), F.col("b").asc()
     )
-    return top.withColumn("rank", F.row_number().over(w)).orderBy("rank")
+    return top.withColumn("rank", F.row_number().over(w))
 
 
 SQL_COLLOCATIONS = r"""
@@ -10967,7 +10820,7 @@ def q_temperature_mixture(spark, sf_dir):
     from .operators.sampling import temperature_quotas
 
     docs = _t(spark, sf_dir, "documents")
-    return temperature_quotas(docs, "source", budget=200).orderBy("group")
+    return temperature_quotas(docs, "source", budget=200)
 
 
 SQL_TEMPERATURE_MIXTURE = """
@@ -11253,7 +11106,6 @@ def q_ivf_eval(spark, sf_dir):
             .alias("recall_micro"),
             (F.col("n_scanned") < F.col("n_corpus")).alias("partial_probe"),
         )
-        .orderBy("query_id")
     )
 
 
@@ -11394,7 +11246,6 @@ def q_phrase_search(spark, sf_dir):
     return (
         phrase_search(p, "table hash")
         .select(F.col("doc").alias("doc_id"), "n_matches")
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -11430,7 +11281,6 @@ def q_phrase_persisted(spark, sf_dir):
     return (
         phrase_search(idx, "table hash")
         .select(F.col("doc").alias("doc_id"), "n_matches")
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -11471,7 +11321,7 @@ def q_jaccard_prefix_join(spark, sf_dir):
     from .operators.dedup import jaccard_join_prefix
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return jaccard_join_prefix(docs, "text", "doc_id", 4, 5).sortWithinPartitions("a", "b")
+    return jaccard_join_prefix(docs, "text", "doc_id", 4, 5)
 
 
 SQL_JACCARD_PREFIX_JOIN = r"""
@@ -11552,7 +11402,7 @@ def q_mmr_rerank(spark, sf_dir):
             .alias("sim_micro"),
         )
     )
-    return mmr_rerank(cands, sims, k=5).orderBy("query_id", "step")
+    return mmr_rerank(cands, sims, k=5)
 
 
 def _mmr_oracle_sql(k: int = 5) -> str:
@@ -11657,7 +11507,6 @@ def q_table_profile(spark, sf_dir):
     return (
         table_profile(li)
         .withColumnRenamed("column", "col_name")
-        .orderBy("col_name")
     )
 
 
@@ -11819,9 +11668,7 @@ def q_pagerank(spark, sf_dir):
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionAll(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     out = pagerank(sym, docs, "doc_id", n_iters=3)
-    return out.select(F.col("v").alias("doc_id"), "rank_micro").sortWithinPartitions(
-        "doc_id"
-    )
+    return out.select(F.col("v").alias("doc_id"), "rank_micro")
 
 
 def _pagerank_oracle_sql(n_iters: int = 3) -> str:
@@ -11914,7 +11761,7 @@ def q_series_trend(spark, sf_dir):
     )
     return agg.select(
         "user_id", "n", slope.alias("slope_micro")
-    ).sortWithinPartitions("user_id")
+    )
 
 
 SQL_SERIES_TREND = f"""
@@ -11961,7 +11808,7 @@ def q_window_suite(spark, sf_dir):
         half_up(F.cume_dist().over(w), 6).alias("cume"),
         F.coalesce(F.lag("value", 1).over(w), F.lit(-1.0)).alias("prev_value"),
         F.coalesce(F.lead("value", 1).over(w), F.lit(-1.0)).alias("next_value"),
-    ).sortWithinPartitions("event_id")
+    )
 
 
 SQL_WINDOW_SUITE = """
@@ -11993,7 +11840,7 @@ def q_rolling_zscore(spark, sf_dir):
     out = rolling_zscore(ev, ["user_id"], "event_id", "value", k=10)
     return out.select(
         "event_id", half_up(F.col("z"), 6).alias("z"), "is_anomaly"
-    ).sortWithinPartitions("event_id")
+    )
 
 
 SQL_ROLLING_ZSCORE = """
@@ -12041,7 +11888,7 @@ def q_resample_linear(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", _ts_ms().alias("ts_ms"), "value"
     )
-    out = resample_linear(
+    return resample_linear(
         ev,
         ["user_id"],
         "ts_ms",
@@ -12050,7 +11897,6 @@ def q_resample_linear(spark, sf_dir):
         grid_end_ms=T_JAN25,
         step_ms=MS_PER_DAY,
     )
-    return out.sortWithinPartitions("user_id", "grid_ts")
 
 
 SQL_RESAMPLE_LINEAR = f"""
@@ -12116,7 +11962,6 @@ def q_quantile_normalize(spark, sf_dir):
     return (
         histogram_cdf(ev, hist, "value")
         .select("event_id", "bucket", "cdf_micro")
-        .sortWithinPartitions("event_id")
     )
 
 
@@ -12244,7 +12089,6 @@ def q_cohort_retention(spark, sf_dir):
         ev.join(cohort, "user_id")
         .groupBy("cohort", (F.col("d") - F.col("cohort")).alias("offset"))
         .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("cohort", "offset")
     )
 
 
@@ -12300,7 +12144,7 @@ def q_data_quality(spark, sf_dir):
             )
         )
     )
-    return report.orderBy("rule")
+    return report
 
 
 SQL_DATA_QUALITY = """
@@ -12360,7 +12204,7 @@ def q_pca_direction(spark, sf_dir):
 
     emb = _t(spark, sf_dir, "embeddings")
     g = gram_matrix(emb, "embedding")
-    return power_iteration(g, dim=64, n_iters=3).orderBy("pos")
+    return power_iteration(g, dim=64, n_iters=3)
 
 
 def _pca_oracle_sql(dim: int = 64, n_iters: int = 3, scale: int = 1000) -> str:
@@ -12434,7 +12278,6 @@ def q_leakage_safe_split(spark, sf_dir):
             F.min("doc_id").alias("min_id"),
             F.max("doc_id").alias("max_id"),
         )
-        .orderBy("split")
     )
 
 
@@ -12496,7 +12339,7 @@ def q_bpe_merges(spark, sf_dir):
     # never touches the persisted word table — release it here (the
     # caller-unpersist contract bpe_train documents; r5 ADVICE)
     state.unpersist()
-    return merges_df(spark, rules).orderBy("round")
+    return merges_df(spark, rules)
 
 
 def _bpe_cte_chain(n_merges: int = 8) -> list[str]:
@@ -12608,7 +12451,6 @@ def q_bpe_token_counts(spark, sf_dir):
             F.coalesce(F.col("n_words"), F.lit(0)).alias("n_words"),
             F.coalesce(F.col("n_subwords"), F.lit(0)).alias("n_subwords"),
         )
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -12685,7 +12527,7 @@ def q_stream_enrichment(spark, sf_dir):
     if not q.awaitTermination(300):
         q.stop()
         raise TimeoutError("stream_enrichment did not drain in 300s")
-    return spark.table(name).orderBy("segment", "event_type")
+    return spark.table(name)
 
 
 SQL_STREAM_ENRICHMENT = """
@@ -12745,7 +12587,6 @@ def q_langid_scores(spark, sf_dir):
         .select(
             "doc_id", "lang", "pred_lang", "n_grams", "hit_grams", "avg_ll"
         )
-        .sortWithinPartitions("doc_id")
     )
 
 
@@ -12839,7 +12680,7 @@ def q_quality_filter_pipeline(spark, sf_dir):
         max_dup_frac=0.15,
         max_dup_char_frac=0.75,
         max_avg_nll=3.49,
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 # the quality stack's CTE chain (through the decision-variable table
@@ -12997,7 +12838,7 @@ def q_corpus_pipeline_v2(spark, sf_dir):
         max_dup_frac=0.15,
         max_dup_char_frac=0.75,
         max_avg_nll=3.49,
-    ).sortWithinPartitions("doc_id")
+    )
 
 
 SQL_CORPUS_PIPELINE_V2 = (

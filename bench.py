@@ -121,6 +121,8 @@ def main():
         "queries": timings,
         "samples": {n: v for n, v in samples.items() if v},
         "sf": float(sf),
+        "master": spark.sparkContext.master,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     if errors:
         out["errors"] = errors

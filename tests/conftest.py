@@ -21,3 +21,14 @@ def spark():
         },
     )
     yield s
+
+
+def root_operator(df) -> str:
+    """Name of a DataFrame's physical root below AdaptiveSparkPlan and
+    any whole-stage-codegen wrapper."""
+    node = df._jdf.queryExecution().executedPlan()
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.inputPlan()
+    while node.nodeName().startswith("WholeStageCodegen"):
+        node = node.child()
+    return node.nodeName()

@@ -164,6 +164,51 @@ class TestLoadTableMemo:
         ).parquet(f"{base}/events.parquet")
         assert load_table(spark, base, "events").count() == n0 + 1
 
+    def test_query_df_memo_skips_tmp_bases(self, spark, tmp_path):
+        """The plan memo follows load_table's temp-root rule: after a
+        part file lands in a write-side events directory, the
+        memoized update_history_dense row must answer over the
+        appended log (the DuckDB oracle), not from the plan and bound
+        literals it built before the append."""
+        import sys
+
+        import duckdb
+        import pyarrow.compute as pc
+
+        sys.path.insert(0, ".")
+        from scripts.check_oracle import duck_kinds, multiset
+
+        from alstom_spark_cassandra_spark.workloads import (
+            ORACLE_SQL,
+            SPARK_QUERIES,
+        )
+
+        name = "update_history_dense"
+        table = tmp_path / "writeside" / "events.parquet"
+        table.mkdir(parents=True)
+        events = pq.read_table("/root/testdata/sf0.001/events.parquet")
+        pq.write_table(events, str(table / "part-0.parquet"))
+        SPARK_QUERIES[name](spark, str(table.parent)).collect()
+        shift = pc.max(events["event_id"])
+        shifted = events.set_column(
+            events.schema.get_field_index("event_id"),
+            "event_id",
+            pc.add(events["event_id"], shift),
+        )
+        pq.write_table(shifted, str(table / "part-1.parquet"))
+
+        df = SPARK_QUERIES[name](spark, str(table.parent))
+        cols = sorted(df.columns)
+        got = [tuple(r[c] for c in cols) for r in df.collect()]
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{table}/*.parquet'")
+        res = con.execute(ORACLE_SQL[name])
+        duck_cols = [d[0] for d in res.description]
+        order = sorted(range(len(duck_cols)), key=lambda i: duck_cols[i])
+        want = [tuple(r[i] for i in order) for r in res.fetchall()]
+        kinds = [duck_kinds(con, ORACLE_SQL[name]).get(c) for c in cols]
+        assert multiset(got, kinds) == multiset(want, kinds)
+
     def test_refresh_tables_invalidates(self, spark, tmp_path, monkeypatch):
         from alstom_spark_cassandra_spark.sources import loader
 

@@ -7,6 +7,7 @@ and exactly what a 100 TB deployment cares about.
 """
 
 import pytest
+from conftest import root_operator
 
 from alstom_spark_cassandra_spark.workloads import SPARK_QUERIES
 
@@ -232,7 +233,6 @@ BNLJ_SANCTIONED = {
     "ivf_persisted",       # same, persisted-index path
     "ivf_index_append",    # same probe shape over the appended index
     "ann_cosine_topk",     # broadcast query vectors
-    "mmr_rerank",          # candidate generation = cosine_topk above
     "ann_quantized_topk",  # broadcast query vectors
     "bm25_retrieval",      # broadcast 1-row corpus scalars
     "bm25_persisted",      # same, persisted-index path
@@ -251,7 +251,6 @@ BNLJ_SANCTIONED = {
     "retrieve_field_window",  # broadcast 1-row bounds scalar
     "reconstruct_message",    # broadcast 1-row epoch scalar
     "histogram_quantiles",    # broadcast 1-row (min, max) scalar
-    "pca_direction",          # broadcast 1-row rescale max per round
     "quantile_normalize",     # broadcast 1-row histogram geometry
     "lsh_eval",               # broadcast 1-row count scalars
     "temperature_mixture",    # broadcast 1-row score total
@@ -279,79 +278,74 @@ BNLJ_SANCTIONED = {
 }
 
 
-# Rows allowed a global-sort rangepartitioning Exchange: the output is
-# BOUNDED (top-k per small query set, fixed group domain, k-row/dim
-# outputs, calendar-bounded rollups, 2-3-row splits) or the range
-# partitioning is the operator's own semantics. Every row whose output
-# scales with the corpus/log/user/vector dimension carries only
-# sortWithinPartitions (in-partition order; the compare is
-# order-insensitive) — a global sort there is a rangepartitioning
-# shuffle of the whole output PLUS a bounds-sampling re-execution of
-# the child (r15 §5, r16 sweep). This list is CLOSED: a new range
-# exchange anywhere else is a scale bug.
+# Rows allowed a global-sort rangepartitioning Exchange. A registry
+# row returns an unordered DataFrame, so a range exchange may only come
+# from an ordered public API of plans/ or operators/ that the row is
+# built on. This list is CLOSED and every entry must still plan the
+# exchange: a new range exchange anywhere else is a presentation sort,
+# i.e. a scale bug (a whole-output shuffle plus a bounds-sampling
+# re-run of the child).
 RANGE_SORT_SANCTIONED = {
-    # per-query top-k serving outputs (queries × k rows)
+    # plans/queries.py: get_message, retrieve_message,
+    # get_multiple_fields_history
+    "message_snapshot_delta", "retrieve_message_asof",
+    "multiple_fields_state",
+    # operators/similarity.py: cosine_topk(_filtered), ivf_topk (the
+    # hybrid rows' dense arm is cosine_topk or the persisted IVF search)
     "ann_cosine_topk", "ann_filtered_topk", "ann_quantized_topk",
-    "bm25_retrieval", "bm25_persisted", "bm25_index_append",
-    "bm25_index_compacted", "bm25_delete", "bm25_delete_purged",
-    "pq_topk", "pq_index_append", "pq_delete", "pq_rerank_topk",
     "ivf_topk", "ivf_persisted", "ivf_index_append", "ivf_delete",
-    "hybrid_rrf", "hybrid_persisted", "mmr_rerank",
-    # bounded eval/report outputs (per-query or per-centroid tallies)
-    "pq_recall_eval", "ivf_eval", "lsh_eval", "hyperplane_lsh_eval",
-    "hyperplane_tables_eval", "routed_incremental_eval",
-    "semantic_dedup_routed_eval", "data_quality",
-    # fixed group domains (event_type / lang / split / status ...)
-    "approx_stats", "cube_events", "distinct_agg", "event_transitions",
-    "exact_quantiles", "histogram_quantiles", "hll_distinct_users",
-    "reconstruct_message", "rollup", "stratified_sample",
-    "corpus_pipeline", "embargo_split", "leakage_safe_split",
-    "train_split", "salted_join", "partitioned_ingest",
-    # calendar-bounded rollups
-    "daily_rollup", "cohort_retention",
-    # dimension-table-bounded TPC-H presentation sorts (the unbounded
-    # ones — q3/q10/q18 top-k, q11/q20 part/supplier-sized — are
-    # TakeOrdered or in-partition)
-    "tpch_q1", "tpch_q4", "tpch_q5", "tpch_q7", "tpch_q8", "tpch_q9",
-    "tpch_q12", "tpch_q13", "tpch_q15", "tpch_q16", "tpch_q22",
-    # k-row / dim-row outputs
-    "topk_per_group", "mean_embedding", "bpe_merges", "pca_direction",
-    "zorder_locality", "minhash_signatures",  # 200-doc slice
-    # bounded requested-field snapshots (argument-sized)
-    "multiple_fields_asof", "multiple_fields_state",
-    "retrieve_message_asof", "message_snapshot_delta",
+    "hybrid_rrf", "hybrid_persisted",
+    # operators/dedup.py: hyperplane_multi_table_eval
+    "hyperplane_tables_eval",
 }
+
+# Rows whose root is a global Sort with no exchange under it:
+# plans/queries.py get_multiple_fields orders its output on the one
+# partition it already computes on, so nothing is shuffled. Closed
+# and live like the lists above.
+ROOT_SORT_SANCTIONED = {"multiple_fields_asof", "multiple_fields_snapshot"}
 
 
 def test_registry_sweep_no_scale_killers(spark):
     """EVERY registry query's physical plan, one sweep: no cartesian
     product, no row-at-a-time Python UDF (BatchEvalPython),
-    nested-loop joins only where a broadcast-tiny side sanctions them
-    (closed allowlist above), and global-sort range exchanges only on
-    bounded outputs (closed allowlist above — an unbounded-output row
-    regaining a presentation orderBy fails here). This is the
-    systematic version of the per-query tests — a refactor that
-    degrades ANY query to an all-pairs plan or drops a UDF into the
-    hot path fails here even if no targeted test covers that query.
-    stream_* queries are excluded (calling them executes the stream;
-    their batch-side plans are covered in test_streaming.py)."""
+    nested-loop joins only where a broadcast-tiny side sanctions them,
+    and no output sort unless an ordered API supplies it: no range
+    exchange and no Sort at the root outside the closed allowlists
+    above. Each allowlist entry must name a registry row whose plan
+    still holds what it sanctions, so a stale entry fails too. This
+    is the systematic version of the per-query tests — a refactor that
+    degrades ANY query to an all-pairs plan, drops a UDF into the hot
+    path or re-adds a presentation sort fails here even if no targeted
+    test covers that query. stream_* queries are excluded (calling
+    them executes the stream; their batch-side plans are covered in
+    test_streaming.py)."""
+    assert len(RANGE_SORT_SANCTIONED) <= 13
+    allowlisted = BNLJ_SANCTIONED | RANGE_SORT_SANCTIONED | ROOT_SORT_SANCTIONED
+    assert allowlisted <= set(SPARK_QUERIES), allowlisted - set(SPARK_QUERIES)
     offenders = {}
     for name, fn in SPARK_QUERIES.items():
         if name.startswith("stream_"):
             continue
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        df = fn(spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()
         hits = [
             t
             for t in ("CartesianProduct", "BatchEvalPython")
             if t in plan
         ]
-        if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_SANCTIONED:
-            hits.append("BroadcastNestedLoopJoin")
-        if (
-            "rangepartitioning" in plan.lower()
-            and name not in RANGE_SORT_SANCTIONED
-        ):
-            hits.append("rangepartitioning")
+        has_bnlj = "BroadcastNestedLoopJoin" in plan
+        if has_bnlj != (name in BNLJ_SANCTIONED):
+            hits.append(f"BroadcastNestedLoopJoin={has_bnlj}")
+        has_range = "rangepartitioning" in plan.lower()
+        if has_range != (name in RANGE_SORT_SANCTIONED):
+            hits.append(f"rangepartitioning={has_range}")
+        root_sort = root_operator(df) == "Sort"
+        if name in ROOT_SORT_SANCTIONED:
+            if not root_sort:
+                hits.append("sanctioned root Sort missing")
+        elif root_sort and name not in RANGE_SORT_SANCTIONED:
+            hits.append("root Sort")
         if hits:
             offenders[name] = hits
     assert not offenders, offenders
@@ -429,8 +423,7 @@ def test_quality_classifier_partial_agg_no_join(spark):
 
 def test_zorder_locality_single_agg_no_join(spark):
     """Pure bit arithmetic + ONE map-side-partial groupBy: no joins,
-    no window, exactly one exchange for the aggregation (plus the
-    presentation sort)."""
+    no window, exactly one exchange for the aggregation."""
     plan = plan_of(spark, "zorder_locality")
     assert "Join" not in plan
     assert "Window" not in plan

@@ -6,6 +6,7 @@ import json
 import random
 
 import pytest
+from conftest import root_operator
 from pyspark.sql import functions as F
 
 from alstom_spark_cassandra_spark.functions.filter_compiler import FilterSyntaxError
@@ -446,6 +447,27 @@ def test_get_multiple_fields_before_any_event(spark, domain):
 def test_retrieve_field_no_filters_returns_all(domain):
     out = retrieve_field(domain["log"], domain["msg"])
     assert out.count() == domain["log"].count()
+
+
+@pytest.mark.parametrize(
+    "window",
+    [{}, {"seq_nb": 250}, {"start_log_time": 1500, "duration": 1000}],
+)
+def test_retrieve_field_sort_output_false_is_unordered(domain, window):
+    """sort_output=False means unordered, as in get_update_history:
+    no Sort at the root; the default orders by the update clock. Both
+    return the same rows."""
+    ordered = retrieve_field(domain["log"], domain["msg"], **window)
+    unordered = retrieve_field(
+        domain["log"], domain["msg"], sort_output=False, **window
+    )
+    assert root_operator(ordered) == "Sort"
+    assert root_operator(unordered) != "Sort"
+    ids = [r.instance_message_id for r in ordered.collect()]
+    assert ids == sorted(ids)
+    assert sorted(map(tuple, unordered.collect())) == sorted(
+        map(tuple, ordered.collect())
+    )
 
 
 def test_get_multiple_fields_defaults(spark, domain):
