@@ -1061,6 +1061,33 @@ def _portable_hyperplanes(
     ]
 
 
+def _portable_bucket(
+    vec_col: str, dim: int, planes: int, seed_ns: str
+) -> Column:
+    """The `bucket` column of the portable hyperplane LSH: one sign bit
+    per _portable_hyperplanes plane, each dot product written out as a
+    left-associated literal sum so every engine evaluates it in the
+    same IEEE order."""
+    w = _portable_hyperplanes(planes, dim, seed_ns)
+    # weights embed as CAST('repr' AS DOUBLE): repr round-trips the
+    # double exactly and the string form survives scientific notation
+    # (a bare '{w}e0' literal breaks when repr emits e.g. 6.8e-05)
+    dots = [
+        " + ".join(
+            f"(CAST('{w[p][d]!r}' AS DOUBLE)"
+            f" * CAST(element_at({vec_col}, {d + 1}) AS DOUBLE))"
+            for d in range(dim)
+        )
+        for p in range(planes)
+    ]
+    return F.expr(
+        " + ".join(
+            f"(CASE WHEN ({dots[p]}) > 0e0 THEN {1 << p} ELSE 0 END)"
+            for p in range(planes)
+        )
+    ).alias("bucket")
+
+
 def embedding_dup_pairs_portable(
     df: DataFrame,
     vec_col: str,
@@ -1081,26 +1108,10 @@ def embedding_dup_pairs_portable(
     ulp-boundary flips. Production uses embedding_dup_pairs
     (xxhash64-seeded planes, array-fold dots, multi-table recall
     knob); this is the audit path that pins the machinery."""
-    w = _portable_hyperplanes(planes, dim, seed_ns)
-    # weights embed as CAST('repr' AS DOUBLE): repr round-trips the
-    # double exactly and the string form survives scientific notation
-    # (a bare '{w}e0' literal breaks when repr emits e.g. 6.8e-05)
-    dots = [
-        " + ".join(
-            f"(CAST('{w[p][d]!r}' AS DOUBLE)"
-            f" * CAST(element_at({vec_col}, {d + 1}) AS DOUBLE))"
-            for d in range(dim)
-        )
-        for p in range(planes)
-    ]
-    bucket = " + ".join(
-        f"(CASE WHEN ({dots[p]}) > 0e0 THEN {1 << p} ELSE 0 END)"
-        for p in range(planes)
-    )
     base = df.select(
         F.col(id_col).alias("doc"),
         F.col(vec_col).cast("array<double>").alias("v"),
-        F.expr(bucket).alias("bucket"),
+        _portable_bucket(vec_col, dim, planes, seed_ns),
     ).withColumn("__n", _l2_norm(F.col("v")))  # once per row, not per pair
     l, r = base.alias("l"), base.alias("r")
     cand = l.join(
@@ -1378,23 +1389,10 @@ def hyperplane_lsh_eval(
     two EQUI joins (grid broadcast, then hash on the block id), every
     block-pair bucket holding (slice/n_blocks)^2 pairs, no
     BroadcastNestedLoopJoin and no CartesianProduct."""
-    w = _portable_hyperplanes(planes, dim, seed_ns)
-    dots = [
-        " + ".join(
-            f"(CAST('{w[p][d]!r}' AS DOUBLE)"
-            f" * CAST(element_at({vec_col}, {d + 1}) AS DOUBLE))"
-            for d in range(dim)
-        )
-        for p in range(planes)
-    ]
-    bucket = " + ".join(
-        f"(CASE WHEN ({dots[p]}) > 0e0 THEN {1 << p} ELSE 0 END)"
-        for p in range(planes)
-    )
     base = df.select(
         F.col(id_col).alias("doc"),
         F.col(vec_col).cast("array<double>").alias("v"),
-        F.expr(bucket).alias("bucket"),
+        _portable_bucket(vec_col, dim, planes, seed_ns),
         F.pmod(F.col(id_col), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     l, r = base.alias("l"), base.alias("r")

@@ -29,6 +29,9 @@ milliseconds, so every query here sees `ts` as epoch-ms ≡ DuckDB's
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -44,6 +47,8 @@ from .functions.text_funcs import (
     token_count,
 )
 from .operators.dedup import (
+    build_minhash_index,
+    build_simhash_index,
     connected_components,
     dedup_corpus,
     dedup_exact,
@@ -57,6 +62,7 @@ from .operators.locf import locf
 from .operators.quantize import dequantize_embedding, quantize_embedding
 from .operators.multimodal import audio_features, frame_sample, image_features
 from .operators.range_join import interval_join
+from .operators.retrieval import build_bm25_index, write_bm25_index
 from .operators.sketches import hll_partial_sketches, hll_rollup
 from .operators.sampling import (
     cap_per_group,
@@ -126,50 +132,80 @@ def _ts_ms(col: str = "ts") -> F.Column:
     return F.col(col)
 
 
-# Per-PROCESS cache of each index family's pristine base build: the
-# gate runs every registry row in one process, and the index rows of
-# one family all start from the SAME deterministic base build (full
-# corpus, default params), so building it once and CLONING it into
-# each row's private directory converts N corpus-sized build passes
-# into 1 + (N-1) local file copies — the r13 verdict's gate-wall
-# budget item.  Per-process (not marker-on-disk) so a testdata change
-# between runs can never serve a stale base; rows stay self-contained
-# (a process running a single row just builds once); and each row
-# still MUTATES only its own clone, so append/compaction rows keep
-# their exact semantics.
+def _slug(sf_dir: str) -> str:
+    """`sf_dir` flattened to an identifier suffix (catalog table names
+    and scratch directory names)."""
+    return "".join(c if c.isalnum() else "_" for c in sf_dir)
+
+
+# The one place a registry row keeps its mutable on-disk state
+# (persisted indexes, bucketed tables, compacted logs, stream sinks
+# and checkpoints): a root private to this process, made on first use
+# and removed at interpreter exit, so concurrent runs over the same sf
+# dir never share a file. It sits under the temp root, which
+# sources.loader.memoizable never memoizes. A process killed by
+# SIGKILL leaves its root behind.
+_SCRATCH_ROOT: list[str] = []
+
+
+def _scratch(sf_dir: str, name: str) -> str:
+    """A path `<root>/<name><slug>` for one row's writes over
+    `sf_dir`; it does not exist when returned (a rerun of the row in
+    this process starts from nothing)."""
+    if not _SCRATCH_ROOT:
+        root = tempfile.mkdtemp(prefix="registry_scratch_")
+        atexit.register(shutil.rmtree, root, True)
+        _SCRATCH_ROOT.append(root)
+    path = f"{_SCRATCH_ROOT[0]}/{name}{_slug(sf_dir)}"
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+# Pristine base build of each index family that several rows start
+# from: built once per process and sf dir, then CLONED into each row's
+# own scratch directory, so N corpus-sized build passes become one
+# build plus N-1 local copies. Rows mutate only their clone.
+_BASE_INDEX_BUILDERS = {
+    "bm25_twothirds": lambda spark, sf_dir, path: write_bm25_index(
+        build_bm25_index(
+            _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 != 0),
+            "text",
+            "doc_id",
+            n_buckets=16,
+        ),
+        path,
+    ),
+    "minhash": lambda spark, sf_dir, path: build_minhash_index(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        path,
+        "text",
+        "doc_id",
+    ),
+    "simhash": lambda spark, sf_dir, path: build_simhash_index(
+        _t(spark, sf_dir, "documents").select("doc_id", "text"),
+        path,
+        "text",
+        "doc_id",
+    ),
+}
 _BASE_INDEX_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _shared_base_index(sf_dir: str, family: str, build_fn) -> str:
-    """Return the path of `family`'s pristine base index for
-    `sf_dir`, building it with `build_fn(path)` on first use in this
-    process. Callers must NOT write to the returned path — clone it
-    with _clone_index first."""
-    import os
-    import shutil
-    import tempfile
-
+def _shared_base_index(spark: SparkSession, sf_dir: str, family: str) -> str:
+    """Path of `family`'s pristine base index over `sf_dir`, built on
+    first use in this process. Never written after the build."""
     key = (family, sf_dir)
     if key not in _BASE_INDEX_CACHE:
-        slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-        path = (
-            f"{tempfile.gettempdir()}/pristine_{family}{slug}"
-            f"_{os.getpid()}"
-        )
-        shutil.rmtree(path, ignore_errors=True)
-        build_fn(path)
+        path = _scratch(sf_dir, f"pristine_{family}")
+        _BASE_INDEX_BUILDERS[family](spark, sf_dir, path)
         _BASE_INDEX_CACHE[key] = path
     return _BASE_INDEX_CACHE[key]
 
 
-def _clone_index(src: str, dst: str) -> str:
-    """Private mutable copy of a pristine base index (local tmp
-    directories — the same locality assumption every gate row's
-    tempfile layout already makes)."""
-    import shutil
-
-    shutil.rmtree(dst, ignore_errors=True)
-    shutil.copytree(src, dst)
+def _clone_index(spark: SparkSession, sf_dir: str, family: str, dst: str):
+    """Copy `family`'s base index to the fresh path `dst`, the row's
+    private mutable index; returns `dst`."""
+    shutil.copytree(_shared_base_index(spark, sf_dir, family), dst)
     return dst
 
 
@@ -637,12 +673,9 @@ def q_compaction_persisted(spark, sf_dir):
     computed DataFrame bit-for-bit, so the oracle is SQL_COMPACTION —
     the bm25_persisted/phrase_persisted pattern applied to the
     reference's own sink."""
-    import tempfile
-
     from .sources.sinks import write_compacted_log
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/compacted_log{slug}"
+    path = _scratch(sf_dir, "compacted_log")
     write_compacted_log(_compacted_log(spark, sf_dir), path)
     return _compacted_as_events(spark.read.parquet(path))
 
@@ -3128,12 +3161,10 @@ def q_ivm_bucketed_persisted(spark, sf_dir):
     must change NOTHING, the same physical-rewrite contract as
     latest_bucketed_persisted/merge_apply. The table stays registered
     for reuse (the *_persisted convention)."""
-    import tempfile
-
     from .operators.ivm import agg_state, merge_agg_deltas
     from .sources.sinks import write_bucketed
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
+    table = f"bkt_ivm{_slug(sf_dir)}"
     keys = ["user_id", "event_type"]
     n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ev = _t(spark, sf_dir, "events").select(
@@ -3146,11 +3177,11 @@ def q_ivm_bucketed_persisted(spark, sf_dir):
     base = ev.filter(F.col("event_id") % 10 < 7)
     write_bucketed(
         agg_state(base, keys, "cents"),
-        f"bkt_ivm{slug}",
+        table,
         keys,
         n_buckets,
         sort_cols=keys,
-        path=f"{tempfile.gettempdir()}/ivm_bucketed{slug}",
+        path=_scratch(sf_dir, "ivm_bucketed"),
     )
     deltas = (
         ev.filter((F.col("event_id") % 10 >= 7) & ~dropk)
@@ -3160,9 +3191,7 @@ def q_ivm_bucketed_persisted(spark, sf_dir):
             .withColumn("mult", F.lit(-1))
         )
     )
-    out = merge_agg_deltas(
-        spark.table(f"bkt_ivm{slug}"), deltas, keys, "cents"
-    )
+    out = merge_agg_deltas(spark.table(table), deltas, keys, "cents")
     return out.select(
         "user_id",
         "event_type",
@@ -3935,8 +3964,6 @@ def q_incremental_semantic_dedup(spark, sf_dir):
     Plan-asserted: the shard assignment is checkpointed after ONE
     scan, so the steady-state plan has ZERO embeddings FileScans and
     the base corpus is never rescanned (tests/test_similarity.py)."""
-    import tempfile
-
     from .operators.similarity import (
         build_semantic_index,
         incremental_semantic_dedup,
@@ -3952,8 +3979,7 @@ def q_incremental_semantic_dedup(spark, sf_dir):
             F.col("embedding").cast("array<double>").alias("cv"),
         )
     )
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/semdedup_index{slug}"
+    index_path = _scratch(sf_dir, "semdedup_index")
     build_semantic_index(base, init, index_path, threshold=0.4)
     new_shard = emb.filter(F.col("vec_id") % 4 == 0)
     return incremental_semantic_dedup(
@@ -4059,8 +4085,6 @@ def q_incremental_semantic_dedup_routed(spark, sf_dir):
     Degenerate n_coarse=k equality with the flat twin is pinned in
     tests/test_similarity.py; zero base-corpus scans and the
     Bucketed: true kept scan are plan-asserted there too."""
-    import tempfile
-
     from .operators.similarity import (
         build_semantic_index,
         routed_incremental_semantic_dedup,
@@ -4076,8 +4100,7 @@ def q_incremental_semantic_dedup_routed(spark, sf_dir):
             F.col("embedding").cast("array<double>").alias("cv"),
         )
     )
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/semdedup_ridx{slug}"
+    index_path = _scratch(sf_dir, "semdedup_ridx")
     build_semantic_index(base, init, index_path, threshold=0.4)
     new_shard = emb.filter(F.col("vec_id") % 4 == 0)
     return routed_incremental_semantic_dedup(
@@ -4154,8 +4177,6 @@ def q_semantic_index_append(spark, sf_dir):
     no matter how many shards have landed — the index's state is
     survivors-only at every step (dropped A rows never suppress B,
     same contract boundary as the base build)."""
-    import tempfile
-
     from .operators.similarity import (
         build_semantic_index,
         incremental_semantic_dedup,
@@ -4171,8 +4192,7 @@ def q_semantic_index_append(spark, sf_dir):
             F.col("embedding").cast("array<double>").alias("cv"),
         )
     )
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/semdedup_chain{slug}"
+    index_path = _scratch(sf_dir, "semdedup_chain")
     build_semantic_index(base, init, index_path, threshold=0.4)
     shard_a = emb.filter(F.col("vec_id") % 4 == 0)
     shard_b = emb.filter(F.col("vec_id") % 4 == 1)
@@ -4348,8 +4368,6 @@ def q_semantic_index_compacted(spark, sf_dir):
     persisted / ivm_bucketed_persisted contract: layout must change
     NOTHING.  File-count mechanics are pinned in
     tests/test_similarity.py."""
-    import tempfile
-
     from .operators.similarity import (
         build_semantic_index,
         compact_semantic_index,
@@ -4366,8 +4384,7 @@ def q_semantic_index_compacted(spark, sf_dir):
             F.col("embedding").cast("array<double>").alias("cv"),
         )
     )
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/semdedup_cpt{slug}"
+    index_path = _scratch(sf_dir, "semdedup_cpt")
     build_semantic_index(base, init, index_path, threshold=0.4)
     shard_a = emb.filter(F.col("vec_id") % 4 == 0)
     shard_b = emb.filter(F.col("vec_id") % 4 == 1)
@@ -4396,8 +4413,6 @@ def q_routed_incremental_eval(spark, sf_dir):
     One row per FLAT cluster: n_vecs, n_cid_agree, n_kept_flat,
     n_kept_routed, n_kept_agree — integer-grid counts the DuckDB
     oracle recomputes exactly."""
-    import tempfile
-
     from .operators.similarity import (
         build_semantic_index,
         routed_incremental_eval,
@@ -4413,8 +4428,7 @@ def q_routed_incremental_eval(spark, sf_dir):
             F.col("embedding").cast("array<double>").alias("cv"),
         )
     )
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/semdedup_reval{slug}"
+    index_path = _scratch(sf_dir, "semdedup_reval")
     build_semantic_index(base, init, index_path, threshold=0.4)
     new_shard = emb.filter(F.col("vec_id") % 4 == 0)
     return routed_incremental_eval(
@@ -4723,18 +4737,10 @@ def q_bm25_persisted(spark, sf_dir):
     tests/test_retrieval.py). Build-once / query-forever is the
     100 TB steady state; output must equal the inline path
     bit-for-bit, so the oracle is SQL_BM25_RETRIEVAL."""
-    import tempfile
-
-    from .operators.retrieval import (
-        bm25_topk,
-        build_bm25_index,
-        read_bm25_index,
-        write_bm25_index,
-    )
+    from .operators.retrieval import bm25_topk, read_bm25_index
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/bm25_index{slug}"
+    path = _scratch(sf_dir, "bm25_index")
     write_bm25_index(
         build_bm25_index(docs, "text", "doc_id", n_buckets=16), path
     )
@@ -4757,33 +4763,15 @@ def q_bm25_index_append(spark, sf_dir):
     bit-for-bit against the FULL-corpus oracle (SQL_BM25_RETRIEVAL
     verbatim) — a lost posting, a stale n_docs, or a wrong avgdl
     shifts every score."""
-    import tempfile
-
     from .operators.retrieval import (
         append_bm25_index,
         bm25_topk,
-        build_bm25_index,
         read_bm25_index,
-        write_bm25_index,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = _shared_base_index(
-        sf_dir,
-        "bm25_twothirds",
-        lambda p: write_bm25_index(
-            build_bm25_index(
-                docs.filter(F.col("doc_id") % 3 != 0),
-                "text",
-                "doc_id",
-                n_buckets=16,
-            ),
-            p,
-        ),
-    )
     path = _clone_index(
-        base, f"{tempfile.gettempdir()}/bm25_append{slug}"
+        spark, sf_dir, "bm25_twothirds", _scratch(sf_dir, "bm25_append")
     )
     append_bm25_index(
         spark, docs.filter(F.col("doc_id") % 3 == 0), path
@@ -4809,34 +4797,16 @@ def q_bm25_index_compacted(spark, sf_dir):
     mechanics pinned in tests/test_sinks.py); stats are carried
     untouched — a compaction that perturbed postings, doc lengths,
     or global stats shifts every score."""
-    import tempfile
-
     from .operators.retrieval import (
         append_bm25_index,
         bm25_topk,
-        build_bm25_index,
         read_bm25_index,
-        write_bm25_index,
     )
     from .sources.sinks import compact_partitioned_parquet
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = _shared_base_index(
-        sf_dir,
-        "bm25_twothirds",
-        lambda p: write_bm25_index(
-            build_bm25_index(
-                docs.filter(F.col("doc_id") % 3 != 0),
-                "text",
-                "doc_id",
-                n_buckets=16,
-            ),
-            p,
-        ),
-    )
     path = _clone_index(
-        base, f"{tempfile.gettempdir()}/bm25_compact{slug}"
+        spark, sf_dir, "bm25_twothirds", _scratch(sf_dir, "bm25_compact")
     )
     append_bm25_index(
         spark, docs.filter(F.col("doc_id") % 3 == 0), path
@@ -4868,22 +4838,11 @@ def q_bm25_delete(spark, sf_dir):
     for a 100 TB serving index — a rebuild per removal is not a
     plan.  Idempotence, purge mechanics and crash story pinned in
     tests/test_deletes.py."""
-    import tempfile
-
     from .operators.deletes import delete_from_bm25_index
-    from .operators.retrieval import (
-        bm25_topk,
-        build_bm25_index,
-        read_bm25_index,
-        write_bm25_index,
-    )
+    from .operators.retrieval import bm25_topk, read_bm25_index
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/bm25_delete{slug}"
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch(sf_dir, "bm25_delete")
     write_bm25_index(
         build_bm25_index(docs, "text", "doc_id", n_buckets=16), path
     )
@@ -4908,24 +4867,14 @@ def q_bm25_delete_purged(spark, sf_dir):
     oracle.  This grades that the purge is content-exact (the
     logical filter and the physical rewrite agree row-for-row) the
     way bm25_index_compacted graded the compaction rewrite."""
-    import shutil
-    import tempfile
-
     from .operators.deletes import (
         delete_from_bm25_index,
         purge_bm25_deletes,
     )
-    from .operators.retrieval import (
-        bm25_topk,
-        build_bm25_index,
-        read_bm25_index,
-        write_bm25_index,
-    )
+    from .operators.retrieval import bm25_topk, read_bm25_index
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/bm25_delpurge{slug}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch(sf_dir, "bm25_delpurge")
     write_bm25_index(
         build_bm25_index(docs, "text", "doc_id", n_buckets=16), path
     )
@@ -4951,9 +4900,6 @@ def q_phrase_delete(spark, sf_dir):
     stats to retract; the index's only delete obligation is the
     serve-path filter).  Oracle = phrase matching recomputed over
     the surviving corpus."""
-    import shutil
-    import tempfile
-
     from .operators.deletes import delete_from_positional_index
     from .operators.retrieval import (
         build_positional_index,
@@ -4963,9 +4909,7 @@ def q_phrase_delete(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/phrase_delete{slug}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch(sf_dir, "phrase_delete")
     write_positional_index(
         build_positional_index(docs, "text", "doc_id", n_buckets=16),
         path,
@@ -4988,16 +4932,11 @@ def q_ivf_delete(spark, sf_dir):
     oracle recomputes exactly that.  A deleted vector surviving in
     any inverted list, or a survivor lost with it, breaks the
     top-10."""
-    import shutil
-    import tempfile
-
     from .operators.deletes import delete_from_ivf_index
     from .operators.similarity import build_ivf_index, search_ivf_index
 
     emb = _t(spark, sf_dir, "embeddings")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/ivf_delete{slug}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch(sf_dir, "ivf_delete")
     build_ivf_index(emb, path, n_centroids=16)
     delete_from_ivf_index(
         spark, emb.filter(F.col("vec_id") % 5 == 0), path
@@ -5025,9 +4964,6 @@ def q_pq_delete(spark, sf_dir):
     dropped from the ADC scoring join (serve_filter), books
     unchanged.  A deleted code surviving in any subspace, or a
     surviving code lost, shifts the approximate ranks."""
-    import shutil
-    import tempfile
-
     from .operators.deletes import delete_from_pq_index
     from .operators.pq import (
         pq_build,
@@ -5042,9 +4978,7 @@ def q_pq_delete(spark, sf_dir):
         F.col("embedding").cast("array<double>").alias("cv"),
     )
     codes, books = pq_build(emb, init, m_sub=4, n_iters=2)
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/pq_delete{slug}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch(sf_dir, "pq_delete")
     write_pq_index(codes, books, path)
     delete_from_pq_index(
         spark, emb.filter(F.col("vec_id") % 5 == 0), path
@@ -5076,28 +5010,18 @@ def q_stream_index_ingest(spark, sf_dir):
     tests/test_streaming.py."""
     import glob
     import os
-    import shutil
-    import tempfile
 
-    from .operators.dedup import build_minhash_index
     from .streaming.live_state import (
         foreach_batch_index_ingest,
         read_index_ingest_pairs,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_ingest{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_ingest")
     index_path = f"{base_dir}/index"
     pairs_sink = f"{base_dir}/pairs"
     os.makedirs(pairs_sink)
-    base = _shared_base_index(
-        sf_dir,
-        "minhash",
-        lambda p: build_minhash_index(docs, p, "text", "doc_id"),
-    )
-    _clone_index(base, index_path)
+    _clone_index(spark, sf_dir, "minhash", index_path)
     shard = docs.filter(F.col("doc_id") % 5 == 0)
     src_dir = f"{base_dir}/src"
     os.makedirs(src_dir)
@@ -5183,28 +5107,18 @@ def q_stream_simhash_ingest(spark, sf_dir):
     tests/test_streaming.py for this family too)."""
     import glob
     import os
-    import shutil
-    import tempfile
 
-    from .operators.dedup import build_simhash_index
     from .streaming.live_state import (
         foreach_batch_simhash_ingest,
         read_index_ingest_pairs,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_simhash{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_simhash")
     index_path = f"{base_dir}/index"
     pairs_sink = f"{base_dir}/pairs"
     os.makedirs(pairs_sink)
-    base = _shared_base_index(
-        sf_dir,
-        "simhash",
-        lambda p: build_simhash_index(docs, p, "text", "doc_id"),
-    )
-    _clone_index(base, index_path)
+    _clone_index(spark, sf_dir, "simhash", index_path)
     shard = docs.filter(F.col("doc_id") % 5 == 0)
     src_dir = f"{base_dir}/src"
     os.makedirs(src_dir)
@@ -5269,8 +5183,6 @@ def q_stream_semantic_ingest(spark, sf_dir):
     tests/test_streaming.py."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from .operators.similarity import (
         build_semantic_index,
@@ -5282,9 +5194,7 @@ def q_stream_semantic_ingest(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_semantic{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_semantic")
     index_path = f"{base_dir}/index"
     pairs_sink = f"{base_dir}/pairs"
     src_dir = f"{base_dir}/src"
@@ -5364,40 +5274,18 @@ def q_stream_bm25_ingest(spark, sf_dir):
     tests/test_streaming.py."""
     import glob
     import os
-    import shutil
-    import tempfile
 
-    from .operators.retrieval import (
-        bm25_topk,
-        build_bm25_index,
-        read_bm25_index,
-        write_bm25_index,
-    )
+    from .operators.retrieval import bm25_topk, read_bm25_index
     from .streaming.live_state import foreach_batch_bm25_ingest
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_bm25{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_bm25")
     index_path = f"{base_dir}/index"
     pairs_sink = f"{base_dir}/pairs"
     src_dir = f"{base_dir}/src"
     os.makedirs(pairs_sink)
     os.makedirs(src_dir)
-    base = _shared_base_index(
-        sf_dir,
-        "bm25_twothirds",
-        lambda p: write_bm25_index(
-            build_bm25_index(
-                docs.filter(F.col("doc_id") % 3 != 0),
-                "text",
-                "doc_id",
-                n_buckets=16,
-            ),
-            p,
-        ),
-    )
-    _clone_index(base, index_path)
+    _clone_index(spark, sf_dir, "bm25_twothirds", index_path)
     for k in range(3):
         b = docs.filter(F.col("doc_id") % 9 == 3 * k).select(
             "doc_id", "text"
@@ -5455,8 +5343,6 @@ def q_stream_winnow_ingest(spark, sf_dir):
     tests/test_streaming.py."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from .operators.winnow import build_winnow_index
     from .streaming.live_state import (
@@ -5469,9 +5355,7 @@ def q_stream_winnow_ingest(spark, sf_dir):
         .filter(F.col("doc_id") < 300)
         .select("doc_id", "text")
     )
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_winnow{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_winnow")
     index_path = f"{base_dir}/index"
     pairs_sink = f"{base_dir}/pairs"
     src_dir = f"{base_dir}/src"
@@ -5604,7 +5488,6 @@ def _stage_stream_batches(frames, src_dir, base_dir):
     gate row."""
     import glob
     import os
-    import shutil
 
     for k, b in enumerate(frames):
         stage = f"{base_dir}/stage{k}"
@@ -5629,8 +5512,6 @@ def q_stream_positional_ingest(spark, sf_dir):
     counts.  Replay guard (started marker + crash-recovery-only
     membership anti-join) pinned in tests/test_streaming.py."""
     import os
-    import shutil
-    import tempfile
 
     from .operators.retrieval import (
         build_positional_index,
@@ -5641,9 +5522,7 @@ def q_stream_positional_ingest(spark, sf_dir):
     from .streaming.live_state import foreach_batch_positional_ingest
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_pos{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_pos")
     index_path = f"{base_dir}/index"
     pairs_sink = f"{base_dir}/pairs"
     src_dir = f"{base_dir}/src"
@@ -5698,16 +5577,12 @@ def q_stream_ivf_ingest(spark, sf_dir):
     mis-written by the stream breaks the top-10.  Replay guard
     pinned in tests/test_streaming.py."""
     import os
-    import shutil
-    import tempfile
 
     from .operators.similarity import build_ivf_index, search_ivf_index
     from .streaming.live_state import foreach_batch_ivf_ingest
 
     emb = _t(spark, sf_dir, "embeddings")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_ivf{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_ivf")
     index_path = f"{base_dir}/index"
     pairs_sink = f"{base_dir}/pairs"
     src_dir = f"{base_dir}/src"
@@ -5763,8 +5638,6 @@ def q_stream_pq_ingest(spark, sf_dir):
     batch append and a graded streaming-ingest member.  Replay guard
     pinned in tests/test_streaming.py."""
     import os
-    import shutil
-    import tempfile
 
     from .operators.pq import (
         pq_build,
@@ -5775,9 +5648,7 @@ def q_stream_pq_ingest(spark, sf_dir):
     from .streaming.live_state import foreach_batch_pq_ingest
 
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_pq{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_pq")
     index_path = f"{base_dir}/index"
     pairs_sink = f"{base_dir}/pairs"
     src_dir = f"{base_dir}/src"
@@ -5829,22 +5700,13 @@ def q_hybrid_persisted(spark, sf_dir):
     forever, no corpus rescans in the serving path (the BM25 arm
     touches only matching bucket directories, the IVF arm only its
     assignment partitions)."""
-    import tempfile
-
-    from .operators.retrieval import (
-        bm25_topk,
-        build_bm25_index,
-        read_bm25_index,
-        rrf_fuse,
-        write_bm25_index,
-    )
+    from .operators.retrieval import bm25_topk, read_bm25_index, rrf_fuse
     from .operators.similarity import build_ivf_index, search_ivf_index
 
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    bm25_path = f"{tempfile.gettempdir()}/hybrid_bm25{slug}"
-    ivf_path = f"{tempfile.gettempdir()}/hybrid_ivf{slug}"
+    bm25_path = _scratch(sf_dir, "hybrid_bm25")
+    ivf_path = _scratch(sf_dir, "hybrid_ivf")
     write_bm25_index(
         build_bm25_index(docs, "text", "doc_id", n_buckets=16),
         bm25_path,
@@ -5877,23 +5739,12 @@ def q_minhash_index_compacted(spark, sf_dir):
     banded-dir twin of bm25_index_compacted: compaction changes the
     file layout and nothing else, here proven through the chained
     append contract rather than a retrieval score."""
-    import tempfile
-
-    from .operators.dedup import (
-        build_minhash_index,
-        incremental_dedup_pairs,
-    )
+    from .operators.dedup import incremental_dedup_pairs
     from .sources.sinks import compact_partitioned_parquet
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = _shared_base_index(
-        sf_dir,
-        "minhash",
-        lambda p: build_minhash_index(docs, p, "text", "doc_id"),
-    )
     index_path = _clone_index(
-        base, f"{tempfile.gettempdir()}/minhash_compact{slug}"
+        spark, sf_dir, "minhash", _scratch(sf_dir, "minhash_compact")
     )
     shard = docs.filter(F.col("doc_id") % 3 == 0)
     batch_a = shard.select(
@@ -5937,8 +5788,6 @@ def q_winnow_index_append(spark, sf_dir):
     shared count, and containment score bit-for-bit over the
     union — pairs with at least one NEW (larger) side, exactly the
     union of the two rounds."""
-    import tempfile
-
     from .operators.winnow import (
         build_winnow_index,
         incremental_winnow_overlap,
@@ -5947,8 +5796,7 @@ def q_winnow_index_append(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").filter(
         F.col("doc_id") < 300
     ).select("doc_id", "text")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/winnow_index{slug}"
+    path = _scratch(sf_dir, "winnow_index")
     build_winnow_index(
         docs, path, "text", "doc_id", k=8, w=4, portable=True
     )
@@ -6288,8 +6136,6 @@ def q_pq_index_append(spark, sf_dir):
     encode over everything (train_filter) — the exact build+append
     split, bit-for-bit.  Every persisted index family in the engine
     now has a graded append row."""
-    import tempfile
-
     from .operators.pq import (
         append_pq_index,
         pq_build,
@@ -6305,8 +6151,7 @@ def q_pq_index_append(spark, sf_dir):
     )
     base = emb.filter(F.col("vec_id") % 3 != 0)
     codes, books = pq_build(base, init, m_sub=4, n_iters=2)
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/pq_append{slug}"
+    path = _scratch(sf_dir, "pq_append")
     write_pq_index(codes, books, path)
     append_pq_index(spark, emb.filter(F.col("vec_id") % 3 == 0), path)
     rc, rb = read_pq_index(spark, path)
@@ -6328,8 +6173,6 @@ def q_positional_index_append(spark, sf_dir):
     append ≡ rebuild content-identically and the oracle is
     SQL_PHRASE_SEARCH over the full corpus, verbatim — a lost or
     mis-bucketed posting loses phrase matches."""
-    import tempfile
-
     from .operators.retrieval import (
         append_positional_index,
         build_positional_index,
@@ -6339,8 +6182,7 @@ def q_positional_index_append(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/pos_append{slug}"
+    path = _scratch(sf_dir, "pos_append")
     write_positional_index(
         build_positional_index(
             docs.filter(F.col("doc_id") % 3 != 0),
@@ -6925,15 +6767,10 @@ def q_incremental_dedup(spark, sf_dir):
     makes the output exactly the identical-text pairs with a new
     side — the oracle. Partial-threshold behavior is pinned in
     tests/test_dedup.py."""
-    import tempfile
-
-    from .operators.dedup import build_minhash_index, incremental_dedup_pairs
+    from .operators.dedup import incremental_dedup_pairs
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # stable path (no PYTHONHASHSEED dependence) so reruns overwrite
-    # instead of littering /tmp with orphaned index dirs
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/minhash_index{slug}"
+    index_path = _scratch(sf_dir, "minhash_index")
     build_minhash_index(docs, index_path, "text", "doc_id")
     new_batch = docs.select(
         (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
@@ -6977,16 +6814,10 @@ def q_incremental_simhash(spark, sf_dir):
     is exactly the identical-text pairs with a new side — the same
     engine-neutral oracle as incremental_dedup. Partial-Hamming
     recall stays gated in tests/test_dedup.py."""
-    import tempfile
-
-    from .operators.dedup import (
-        build_simhash_index,
-        incremental_simhash_pairs,
-    )
+    from .operators.dedup import incremental_simhash_pairs
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/simhash_index{slug}"
+    index_path = _scratch(sf_dir, "simhash_index")
     build_simhash_index(docs, index_path, "text", "doc_id")
     new_batch = docs.select(
         (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
@@ -7041,22 +6872,11 @@ def q_minhash_index_append(spark, sf_dir):
     The pre-append snapshot contract (a batch never pairs against
     its own appended rows) is pinned in tests/test_dedup.py.
     """
-    import tempfile
-
-    from .operators.dedup import (
-        build_minhash_index,
-        incremental_dedup_pairs,
-    )
+    from .operators.dedup import incremental_dedup_pairs
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = _shared_base_index(
-        sf_dir,
-        "minhash",
-        lambda p: build_minhash_index(docs, p, "text", "doc_id"),
-    )
     index_path = _clone_index(
-        base, f"{tempfile.gettempdir()}/minhash_chain{slug}"
+        spark, sf_dir, "minhash", _scratch(sf_dir, "minhash_chain")
     )
     shard = docs.filter(F.col("doc_id") % 3 == 0)
     batch_a = shard.select(
@@ -7088,22 +6908,11 @@ def q_simhash_index_append(spark, sf_dir):
     band key, so after the text-equality verify both rounds together
     are exactly the identical-text pairs with a new side — the same
     engine-neutral oracle."""
-    import tempfile
-
-    from .operators.dedup import (
-        build_simhash_index,
-        incremental_simhash_pairs,
-    )
+    from .operators.dedup import incremental_simhash_pairs
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = _shared_base_index(
-        sf_dir,
-        "simhash",
-        lambda p: build_simhash_index(docs, p, "text", "doc_id"),
-    )
     index_path = _clone_index(
-        base, f"{tempfile.gettempdir()}/simhash_chain{slug}"
+        spark, sf_dir, "simhash", _scratch(sf_dir, "simhash_chain")
     )
     shard = docs.filter(F.col("doc_id") % 3 == 0)
     batch_a = shard.select(
@@ -7854,22 +7663,16 @@ def q_stream_sink_exactly_once(spark, sf_dir):
     replay + restart + disk round-trip must land exactly on the batch
     answer, which is the S6/S7 memory-sink contract
     (stream_latest_state) extended to a durable sink."""
-    import shutil
-    import tempfile
-
     from .sources.loader import stream_source
     from .streaming.live_state import (
         foreach_batch_upsert_sink,
         read_upsert_sink,
     )
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    sink = f"{tempfile.gettempdir()}/stream_upsert_sink{slug}"
-    ckpt = f"{tempfile.gettempdir()}/stream_upsert_ckpt{slug}"
     # self-contained run: the idempotence proof is the in-query double
     # start, not reuse of a previous session's checkpoint
-    shutil.rmtree(sink, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    sink = _scratch(sf_dir, "stream_upsert_sink")
+    ckpt = _scratch(sf_dir, "stream_upsert_ckpt")
 
     def _run_once():
         src = stream_source(spark, sf_dir, "events")
@@ -8503,14 +8306,10 @@ def q_ivf_persisted(spark, sf_dir):
     the same exact-cosine SQL as ann_cosine_topk. Partial-probe
     pruning (only nprobe/C of assignment partitions read) is pinned in
     tests/test_similarity.py."""
-    import tempfile
-
     from .operators.similarity import build_ivf_index, search_ivf_index
 
     emb = _t(spark, sf_dir, "embeddings")
-    # stable path so reruns overwrite instead of littering /tmp
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/ivf_index{slug}"
+    index_path = _scratch(sf_dir, "ivf_index")
     build_ivf_index(emb, index_path, n_centroids=16)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -8535,8 +8334,6 @@ def q_ivf_index_append(spark, sf_dir):
     the top-10.  Partial-probe behavior after append (appended
     vectors found inside their bucket's pruned probe) is pinned in
     tests/test_similarity.py."""
-    import tempfile
-
     from .operators.similarity import (
         append_ivf_index,
         build_ivf_index,
@@ -8544,8 +8341,7 @@ def q_ivf_index_append(spark, sf_dir):
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    index_path = f"{tempfile.gettempdir()}/ivf_append{slug}"
+    index_path = _scratch(sf_dir, "ivf_append")
     build_ivf_index(
         emb.filter(F.col("vec_id") % 3 != 0), index_path, n_centroids=16
     )
@@ -8733,14 +8529,11 @@ def q_bucketed_join_persisted(spark, sf_dir):
     The bucketed tables stay REGISTERED after the call (the returned
     plan reads them lazily, and a persisted layout's whole point is
     reuse across queries — the ivf_persisted/bm25_persisted
-    convention); paths are per-sf-slugged so reruns overwrite in
-    place. Single-writer like every *_persisted query."""
-    import tempfile
-
+    convention); a rerun re-registers them over a fresh scratch
+    directory. Single-writer like every *_persisted query."""
     from .sources.sinks import write_bucketed
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = f"{tempfile.gettempdir()}/bucketed_join{slug}"
+    base = _scratch(sf_dir, "bucketed_join")
     orders = _t(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"),
         "o_orderkey",
@@ -8751,7 +8544,8 @@ def q_bucketed_join_persisted(spark, sf_dir):
     cust = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"), "c_mktsegment"
     )
-    t_orders, t_cust = f"bkt_orders{slug}", f"bkt_cust{slug}"
+    t_orders = f"bkt_orders{_slug(sf_dir)}"
+    t_cust = f"bkt_cust{_slug(sf_dir)}"
     write_bucketed(
         orders, t_orders, ["custkey"], 8, sort_cols=["custkey"],
         path=f"{base}/orders",
@@ -8810,14 +8604,10 @@ def q_stream_late_data(spark, sf_dir):
     query proves."""
     import glob
     import os
-    import shutil
-    import tempfile
     import uuid
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = f"{tempfile.gettempdir()}/stream_late{slug}"
     # self-contained run: fresh source + checkpoint every call
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch(sf_dir, "stream_late")
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "ts",
@@ -8975,15 +8765,11 @@ def _staged_interval_join_replay(spark, sf_dir, how, tag, files=None):
     the caller is fine (same SparkContext)."""
     import glob
     import os
-    import shutil
-    import tempfile
     import uuid
 
     from .streaming.live_state import interval_join_stream
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = f"{tempfile.gettempdir()}/stream_{tag}{slug}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch(sf_dir, f"stream_{tag}")
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "ts",
@@ -9287,15 +9073,11 @@ def q_stream_quota(spark, sf_dir):
     rejected (cross-batch state, not a per-batch head)."""
     import glob
     import os
-    import shutil
-    import tempfile
     import uuid
 
     from .streaming.live_state import quota_stream
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = f"{tempfile.gettempdir()}/stream_quota{slug}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch(sf_dir, "stream_quota")
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -9531,17 +9313,13 @@ def q_stream_cdc_apply(spark, sf_dir):
     the snapshot, never a re-aggregation of history."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from .streaming.live_state import (
         foreach_batch_merge_sink,
         read_merge_sink,
     )
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_cdc{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_cdc")
     sink = f"{base_dir}/sink"
     os.makedirs(sink)
     ev = _t(spark, sf_dir, "events").select(
@@ -9637,8 +9415,6 @@ def q_ivm_time_travel(spark, sf_dir):
     legitimately sit at cnt 0 with a nonzero total in STATE."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from .operators.ivm import agg_state
     from .streaming.live_state import (
@@ -9646,9 +9422,7 @@ def q_ivm_time_travel(spark, sf_dir):
         read_merge_sink,
     )
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/ivm_tt{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "ivm_tt")
     sink = f"{base_dir}/sink"
     os.makedirs(sink)
     ev = _t(spark, sf_dir, "events").select(
@@ -9757,8 +9531,6 @@ def q_stream_agg_maintenance(spark, sf_dir):
     they correct, making the transient-state survival non-vacuous."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from .operators.ivm import agg_state
     from .streaming.live_state import (
@@ -9766,9 +9538,7 @@ def q_stream_agg_maintenance(spark, sf_dir):
         read_merge_sink,
     )
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base_dir = f"{tempfile.gettempdir()}/stream_ivm{slug}"
-    shutil.rmtree(base_dir, ignore_errors=True)
+    base_dir = _scratch(sf_dir, "stream_ivm")
     sink = f"{base_dir}/sink"
     os.makedirs(sink)
     ev = _t(spark, sf_dir, "events").select(
@@ -9911,12 +9681,9 @@ def q_partitioned_ingest(spark, sf_dir):
     idempotent (the batch-replay twin of the streaming sink's
     per-batch-id overwrite). Oracle: the same windowed aggregate
     over the raw table — layout must change nothing."""
-    import tempfile
-
     from .sources.sinks import write_partitioned
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/part_ingest{slug}"
+    path = _scratch(sf_dir, "part_ingest")
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
@@ -9977,14 +9744,11 @@ def q_latest_bucketed_persisted(spark, sf_dir):
     reconstruction and shuffling nothing. Oracle: the plain argmax —
     bucketing is physical layout and must change nothing. The table
     stays registered for reuse (the *_persisted convention)."""
-    import tempfile
-
     from .sources.sinks import write_bucketed
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = f"{tempfile.gettempdir()}/latest_bucketed{slug}"
+    base = _scratch(sf_dir, "latest_bucketed")
     log = _domain_log(_t(spark, sf_dir, "events"))
-    t_log = f"bkt_log{slug}"
+    t_log = f"bkt_log{_slug(sf_dir)}"
     write_bucketed(
         log,
         t_log,
@@ -10041,8 +9805,6 @@ def q_stream_latest_ttl(spark, sf_dir):
     lifecycle tests, so a Spark upgrade fails locally first)."""
     import glob
     import os
-    import shutil
-    import tempfile
 
     from .streaming.live_state import (
         foreach_batch_upsert_sink,
@@ -10050,9 +9812,7 @@ def q_stream_latest_ttl(spark, sf_dir):
         stateful_latest_value,
     )
 
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    base = f"{tempfile.gettempdir()}/stream_ttl{slug}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch(sf_dir, "stream_ttl")
     ev = (
         _t(spark, sf_dir, "events")
         .select(
@@ -11262,8 +11022,6 @@ def q_phrase_persisted(spark, sf_dir):
     terms' bucket directories. Build-once / query-forever; output
     must equal the inline path bit-for-bit, so the oracle is
     SQL_PHRASE_SEARCH."""
-    import tempfile
-
     from .operators.retrieval import (
         build_positional_index,
         phrase_search,
@@ -11272,8 +11030,7 @@ def q_phrase_persisted(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents")
-    slug = "".join(c if c.isalnum() else "_" for c in sf_dir)
-    path = f"{tempfile.gettempdir()}/pos_index{slug}"
+    path = _scratch(sf_dir, "pos_index")
     write_positional_index(
         build_positional_index(docs, "text", "doc_id", n_buckets=16), path
     )

@@ -6,6 +6,10 @@ These assert against the PHYSICAL plan text — cheap (no execution)
 and exactly what a 100 TB deployment cares about.
 """
 
+import os
+import tempfile
+import time
+
 import pytest
 from conftest import root_operator
 
@@ -319,11 +323,18 @@ def test_registry_sweep_no_scale_killers(spark):
     path or re-adds a presentation sort fails here even if no targeted
     test covers that query. stream_* queries are excluded (calling
     them executes the stream; their batch-side plans are covered in
-    test_streaming.py)."""
+    test_streaming.py).
+
+    The same pass checks where the rows write: no top-level entry of
+    the temp dir named for SF may be created or modified by the sweep,
+    because a path shared by every process on the host lets two runs
+    over one sf dir corrupt each other's indexes. Rows write only
+    under their process's own scratch root."""
     assert len(RANGE_SORT_SANCTIONED) <= 13
     allowlisted = BNLJ_SANCTIONED | RANGE_SORT_SANCTIONED | ROOT_SORT_SANCTIONED
     assert allowlisted <= set(SPARK_QUERIES), allowlisted - set(SPARK_QUERIES)
     offenders = {}
+    t0 = time.time()
     for name, fn in SPARK_QUERIES.items():
         if name.startswith("stream_"):
             continue
@@ -349,6 +360,14 @@ def test_registry_sweep_no_scale_killers(spark):
         if hits:
             offenders[name] = hits
     assert not offenders, offenders
+    slug = "".join(c if c.isalnum() else "_" for c in SF)
+    shared = sorted(
+        e.name
+        for e in os.scandir(tempfile.gettempdir())
+        if e.name.endswith(slug)
+        and e.stat(follow_symlinks=False).st_mtime >= t0
+    )
+    assert not shared, shared
 
 
 def test_update_history_1000_series_plan_shape(spark):
