@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.loader import read_parquet
+
 
 # --------------------------------------------------------------------------
 # exact dedup
@@ -757,7 +759,7 @@ def build_minhash_index(
     # derive bands from the WRITTEN signatures, not the in-memory
     # lineage — otherwise the corpus is shingled and hashed twice
     spark = df.sparkSession
-    sig_back = spark.read.parquet(f"{path}/signatures")
+    sig_back = read_parquet(spark, f"{path}/signatures")
     minhash_bands(sig_back, num_hashes, bands).write.mode(
         "overwrite"
     ).partitionBy("band").parquet(f"{path}/bands")
@@ -834,8 +836,8 @@ def incremental_dedup_pairs(
     # snapshot the index file listing BEFORE any append: the returned
     # plan must see the PRE-append index (a batch never pairs against
     # its own rows twice)
-    old_bands = spark.read.parquet(f"{index_path}/bands")
-    old_sigs = spark.read.parquet(f"{index_path}/signatures")
+    old_bands = read_parquet(spark, f"{index_path}/bands")
+    old_sigs = read_parquet(spark, f"{index_path}/signatures")
     if update_index:
         new_sig.write.mode("append").parquet(f"{index_path}/signatures")
         new_bands.write.mode("append").partitionBy("band").parquet(
@@ -940,7 +942,7 @@ def incremental_simhash_pairs(
         eager=True
     )
     new_bands = simhash_bands(new_fp, max_hamming)
-    old_bands = spark.read.parquet(f"{index_path}/bands")
+    old_bands = read_parquet(spark, f"{index_path}/bands")
     if update_index:
         new_bands.write.mode("append").partitionBy("band").parquet(
             f"{index_path}/bands"

@@ -46,6 +46,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sources.loader import read_parquet
+
 
 def _fs(spark, path: str):
     jvm = spark._jvm
@@ -64,7 +66,7 @@ def read_tombstones(
     _jvm, _p, fs = _fs(spark, tomb)
     if not fs.exists(_p):
         return None
-    return spark.read.parquet(tomb).select(id_name)
+    return read_parquet(spark, tomb).select(id_name)
 
 
 def write_tombstones(
@@ -118,7 +120,7 @@ def delete_from_bm25_index(
     idempotent rebuild)."""
     from .index_meta import write_index_params
 
-    doc_len = spark.read.parquet(f"{path}/doc_len")
+    doc_len = read_parquet(spark, f"{path}/doc_len")
     # restrict to docs actually indexed: only they carry stats
     victims = write_tombstones(
         spark,
@@ -133,7 +135,7 @@ def delete_from_bm25_index(
     n_gone = int(delta["n"] or 0)
     if not n_gone:
         return 0
-    old = spark.read.parquet(f"{path}/stats").first()
+    old = read_parquet(spark, f"{path}/stats").first()
     write_index_params(
         spark,
         path,
@@ -245,17 +247,17 @@ def purge_index_deletes(
                     ).partitionBy(part).parquet(target)
 
             if not sfs.exists(committed):
-                tomb = spark.read.parquet(tomb_dir).select(
+                tomb = read_parquet(spark, tomb_dir).select(
                     id_name
                 ).distinct()
                 _write(
-                    spark.read.parquet(live).join(
+                    read_parquet(spark, live).join(
                         F.broadcast(tomb), id_name, "left_anti"
                     ),
                     stage,
                     pcol,
                 )
-            _write(spark.read.parquet(stage), live, pcol)
+            _write(read_parquet(spark, stage), live, pcol)
             sfs.delete(spath, True)
     finally:
         spark.conf.set(infer_key, saved)

@@ -35,6 +35,8 @@ from __future__ import annotations
 
 import warnings
 
+from ..sources.loader import read_parquet
+
 
 def write_index_params(
     spark, index_path: str, values: tuple, schema: str, table: str = "params"
@@ -56,7 +58,7 @@ def read_index_params(spark, index_path: str, table: str = "params"):
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(f"{index_path}/{table}").first()
+        return read_parquet(spark, f"{index_path}/{table}").first()
     except AnalysisException as exc:
         if "PATH_NOT_FOUND" not in str(exc) and (
             "Path does not exist" not in str(exc)

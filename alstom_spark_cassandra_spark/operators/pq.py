@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .similarity import _argmin_cid
+from ..sources.loader import read_parquet
 
 
 def _pq_assign(
@@ -362,9 +363,9 @@ def read_pq_index(spark, path: str) -> tuple[DataFrame, DataFrame]:
 
     return (
         apply_tombstones(
-            spark, path, spark.read.parquet(f"{path}/codes"), "vec_id"
+            spark, path, read_parquet(spark, f"{path}/codes"), "vec_id"
         ),
-        spark.read.parquet(f"{path}/codebooks"),
+        read_parquet(spark, f"{path}/codebooks"),
     )
 
 
@@ -404,7 +405,7 @@ def append_pq_index(
             stacklevel=2,
         )
     book_rows = (
-        spark.read.parquet(f"{path}/codebooks")
+        read_parquet(spark, f"{path}/codebooks")
         .orderBy("sub", "cid", "pos")
         .collect()
     )

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.text_funcs import tokens
+from ..sources.loader import read_parquet
 
 MICRO = 1_000_000
 
@@ -123,12 +124,12 @@ def read_bm25_index(spark, path: str) -> Bm25Index:
 
     return Bm25Index(
         apply_tombstones(
-            spark, path, spark.read.parquet(f"{path}/postings"), "doc"
+            spark, path, read_parquet(spark, f"{path}/postings"), "doc"
         ),
         apply_tombstones(
-            spark, path, spark.read.parquet(f"{path}/doc_len"), "doc"
+            spark, path, read_parquet(spark, f"{path}/doc_len"), "doc"
         ),
-        spark.read.parquet(f"{path}/stats"),
+        read_parquet(spark, f"{path}/stats"),
     )
 
 
@@ -158,7 +159,7 @@ def append_bm25_index(
     the appends through a transactional table format or re-run the
     idempotent build; the semantics here are the contract, the
     atomicity story is storage-layer."""
-    old = spark.read.parquet(f"{path}/stats").first()
+    old = read_parquet(spark, f"{path}/stats").first()
     n_buckets = int(old["n_buckets"])
     new_postings = build_postings(new_docs, text_col, id_col)
     if n_buckets:
@@ -326,10 +327,10 @@ def read_positional_index(spark, path: str) -> PositionalIndex:
     away so phrase_search never matches them."""
     from .deletes import apply_tombstones
 
-    nb = int(spark.read.parquet(f"{path}/meta").first()["n_buckets"] or 0)
+    nb = int(read_parquet(spark, f"{path}/meta").first()["n_buckets"] or 0)
     return PositionalIndex(
         apply_tombstones(
-            spark, path, spark.read.parquet(f"{path}/postings"), "doc"
+            spark, path, read_parquet(spark, f"{path}/postings"), "doc"
         ),
         nb,
     )

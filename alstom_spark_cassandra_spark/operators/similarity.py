@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.loader import read_parquet
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -258,7 +260,7 @@ def append_ivf_index(
     remains bit-exact vs brute force regardless of assignment (every
     bucket is scanned), which is the graded contract; partial-probe
     behavior after append is pinned in tests."""
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_parquet(spark, f"{path}/centroids")
     assigned = _assign(new_vecs, cents, corpus_vec, corpus_id, 1)
     (
         assigned.select("vec_id", F.col("__v").alias("v"), "cid")
@@ -285,9 +287,9 @@ def search_ivf_index(
     is bit-exact brute force over the surviving corpus."""
     from .deletes import apply_tombstones
 
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_parquet(spark, f"{path}/centroids")
     assignment = apply_tombstones(
-        spark, path, spark.read.parquet(f"{path}/assignment"), "vec_id"
+        spark, path, read_parquet(spark, f"{path}/assignment"), "vec_id"
     )
     return _probe_and_rank(
         assignment, cents, queries, k, nprobe, query_id, query_vec, "v"
@@ -1097,10 +1099,10 @@ def _kept_df(spark, index_path: str) -> DataFrame:
             ):
                 spark.sql(f"DROP TABLE {old}")
         n_buckets = int(
-            spark.read.parquet(f"{index_path}/meta")
+            read_parquet(spark, f"{index_path}/meta")
             .collect()[0]["n_buckets"]
         )
-        schema = spark.read.parquet(f"{index_path}/kept").schema
+        schema = read_parquet(spark, f"{index_path}/kept").schema
         cols = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
         )
@@ -1234,7 +1236,7 @@ def _read_centroids(spark, index_path: str) -> dict[int, list[int]]:
     """The persisted centroid grid as the driver-side {cid: qc} map —
     k x dim tiny-scalar collect, the steady state's only collect."""
     cent_rows = (
-        spark.read.parquet(f"{index_path}/centroids")
+        read_parquet(spark, f"{index_path}/centroids")
         .orderBy("cid", "pos")
         .collect()
     )
@@ -1371,7 +1373,7 @@ def _append_survivors(
         )
     )
     n_buckets = int(
-        spark.read.parquet(f"{index_path}/meta")
+        read_parquet(spark, f"{index_path}/meta")
         .collect()[0]["n_buckets"]
     )
     # bucket-aligned repartition: one new file per bucket per append
@@ -1625,14 +1627,14 @@ def compact_semantic_index(spark, index_path: str) -> None:
     from ..sources.sinks import write_bucketed
 
     n_buckets = int(
-        spark.read.parquet(f"{index_path}/meta")
+        read_parquet(spark, f"{index_path}/meta")
         .collect()[0]["n_buckets"]
     )
     name = _kept_table_name(index_path)
     tmp_name = name + "_compact_stage"
     tmp_path = f"{index_path}/kept_compact_stage"
     write_bucketed(
-        spark.read.parquet(f"{index_path}/kept").repartition(
+        read_parquet(spark, f"{index_path}/kept").repartition(
             n_buckets, F.col("cid")
         ),
         tmp_name,
@@ -1641,7 +1643,7 @@ def compact_semantic_index(spark, index_path: str) -> None:
         path=tmp_path,
     )
     write_bucketed(
-        spark.read.parquet(tmp_path).repartition(
+        read_parquet(spark, tmp_path).repartition(
             n_buckets, F.col("cid")
         ),
         name,

@@ -48,6 +48,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..sources.loader import read_parquet
+
 
 def _normalized(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(doc, norm): lowercase, whitespace runs collapsed to single
@@ -303,8 +305,8 @@ def incremental_winnow_overlap(
     )
     # snapshot the index BEFORE any append (same contract as the
     # MinHash twin: the returned plan must see the pre-append index)
-    old_e = spark.read.parquet(f"{index_path}/fps")
-    old_sizes = spark.read.parquet(f"{index_path}/sizes")
+    old_e = read_parquet(spark, f"{index_path}/fps")
+    old_sizes = read_parquet(spark, f"{index_path}/sizes")
     if update_index:
         new_e.write.mode("append").partitionBy("bucket").parquet(
             f"{index_path}/fps"

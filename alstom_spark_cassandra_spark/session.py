@@ -23,6 +23,18 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Cluster-driver heap ceiling; a smaller host gets half its memory.
+_MAX_DRIVER_MIB = 24 * 1024
+
+
+def default_driver_memory() -> str:
+    """spark.driver.memory when SPARK_GRAFT_DRIVER_MEM is unset: half
+    the host's physical memory, capped at 24g. A heap the host cannot
+    back lets G1 grow past the host's free memory and get the JVM
+    OOM-killed instead of collecting."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(_MAX_DRIVER_MIB, phys // 2 >> 20)}m"
+
 
 def get_spark(
     app_name: str = "alstom_spark_cassandra_spark",
@@ -50,7 +62,11 @@ def get_spark(
         # either encoding (long-ns or timestamp[us]) to epoch-ms —
         # sources/loader.normalize_event_time.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

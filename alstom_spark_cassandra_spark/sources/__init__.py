@@ -4,6 +4,7 @@ from .loader import (
     load_table,
     load_table_window,
     normalize_event_time,
+    read_parquet,
     register_all,
     stream_event_time,
     stream_source,
@@ -26,6 +27,7 @@ __all__ = [
     "load_table",
     "load_table_window",
     "normalize_event_time",
+    "read_parquet",
     "register_all",
     "stream_event_time",
     "stream_source",

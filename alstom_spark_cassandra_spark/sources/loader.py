@@ -23,25 +23,30 @@ query predicates.
 
 from __future__ import annotations
 
+import json
 from weakref import WeakKeyDictionary
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Per-session memo of the lazy parquet-scan DataFrame per (base, table).
-# This caches PLAN METADATA (file listing + inferred schema + the
+# This caches PLAN METADATA (file listing + footer schema + the
 # canonicalized-ts projection), never data: every execution of a memoized
-# DataFrame still scans the parquet files. Rationale (measured, round 15):
-# a warm `spark.read.parquet` costs ~80-100 ms of schema inference +
-# py4j round-trips per call, and a snowflake query like tpch_q5 pays it
-# six times PER CONSTRUCTION — ~0.6 s of driver-side latency for scans
-# whose schemas cannot have changed. Freshness semantics match what
-# `spark.read.parquet` already pins at analysis time (the file listing is
-# captured when the DataFrame is built); a caller that appends files to a
-# memoized table's directory must call `refresh_tables()` — exactly
-# Spark's own catalog `refreshTable` contract. The Cassandra branch is
-# NOT memoized (its ts-unit conf is read per call).
+# DataFrame still scans the parquet files. What a miss costs: opening a
+# table starts no Spark job (read_parquet reads the footer on the
+# driver), but the status lookup, footer read, Spark's own file listing
+# and their py4j round trips still take ~28 ms per table (sf0.1,
+# 4 cores; the inferred-schema open it replaced took ~89 ms), and a
+# snowflake query like tpch_q5 opens six tables PER CONSTRUCTION.
+# Freshness semantics match what `spark.read.parquet` already pins at
+# analysis time (the file listing is captured when the DataFrame is
+# built); a caller that appends files to a memoized table's directory
+# must call `refresh_tables()` — exactly Spark's own catalog
+# `refreshTable` contract. The Cassandra branch is NOT memoized (its
+# ts-unit conf is read per call).
 _TABLE_MEMO: WeakKeyDictionary = WeakKeyDictionary()
 
 # Bases under this root are write-side (streaming sinks, index
@@ -76,9 +81,9 @@ def register_plan_memo(memo) -> None:
 
 def refresh_tables(spark: SparkSession | None = None) -> None:
     """Drop the per-session load_table memo (all sessions when None) so
-    the next load re-lists files and re-infers schema. Registered
-    downstream plan memos are dropped too — they embed literals
-    resolved from the frozen listing."""
+    the next load re-lists files and re-reads the footer schema.
+    Registered downstream plan memos are dropped too — they embed
+    literals resolved from the frozen listing."""
     if spark is None:
         _TABLE_MEMO.clear()
         for m in _EXTRA_MEMOS:
@@ -167,31 +172,142 @@ def stream_event_time(df: DataFrame, col: str = _EVENT_TIME_COL) -> DataFrame:
     return df.withColumn(col, F.timestamp_millis(epoch_ms_expr(df, col)))
 
 
-def stream_source(
-    spark: SparkSession, base: str, name: str, schema=None
-) -> DataFrame:
+# Summary files Spark's listing keeps despite the leading underscore;
+# a non-merging schema read prefers them, _common_metadata first
+# (ParquetUtils.inferSchema).
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _hidden(name: str) -> bool:
+    """Spark's listing filter (HadoopFSUtils.shouldFilterOutPathName):
+    `_`/`.` names and in-flight `._COPYING_` copies are not part of a
+    table, except the summary files and `_k=v` partition dirs."""
+    if name.startswith(_SUMMARY_FILES):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _parquet_roots(spark: SparkSession, paths) -> tuple:
+    """(hadoop conf, FileStatus per path); the list is None when a
+    path does not exist."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    roots = []
+    for p in paths:
+        hpath = jvm.org.apache.hadoop.fs.Path(p)
+        try:
+            roots.append(hpath.getFileSystem(conf).getFileStatus(hpath))
+        except Py4JJavaError as exc:
+            if not is_instance_of(
+                spark.sparkContext._gateway,
+                exc.java_exception,
+                "java.io.FileNotFoundException",
+            ):
+                raise
+            return conf, None
+    return conf, roots
+
+
+def _leaf_files(fs, status, full: str, out: list) -> None:
+    """Append (full path string, FileStatus) for every leaf file Spark
+    would list under `status`, descending into every visible
+    directory (partition dirs included)."""
+    if not status.isDirectory():
+        out.append((full, status))
+        return
+    for child in fs.listStatus(status.getPath()):
+        name = child.getPath().getName()
+        if not _hidden(name):
+            _leaf_files(fs, child, f"{full}/{name}", out)
+
+
+def _footer_schema(spark: SparkSession, conf, roots) -> T.StructType | None:
+    """The schema Spark's parquet inference would return for `roots`,
+    read on the driver from the footer(s) Spark itself would pick: a
+    summary file, else the first data file by full path
+    (ParquetUtils.splitFiles), or every leaf under
+    spark.sql.parquet.mergeSchema. Spark's own converter reads the
+    footers, so nanosAsLong, TIMESTAMP_NTZ inference and the Spark
+    row-metadata key are honoured. None when no footer is readable."""
+    leaves: list = []
+    for st in roots:
+        hpath = st.getPath()
+        _leaf_files(hpath.getFileSystem(conf), st, hpath.toString(), leaves)
+    leaves.sort(key=lambda leaf: leaf[0])
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    if sql_conf.isParquetSchemaMergingEnabled():
+        picked = [st for _, st in leaves]
+    else:
+        names = [full.rsplit("/", 1)[-1] for full, _ in leaves]
+        summaries = [
+            leaf
+            for want in _SUMMARY_FILES
+            for leaf, name in zip(leaves, names)
+            if name == want
+        ]
+        data = [
+            leaf
+            for leaf, name in zip(leaves, names)
+            if name not in _SUMMARY_FILES
+        ]
+        picked = [st for _, st in (summaries + data)[:1]]
+    if not picked:
+        return None
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.datasources.parquet
+    pff = getattr(getattr(pkg, "ParquetFileFormat$"), "MODULE$")
+    footers = pff.readParquetFootersInParallel(
+        conf, jvm.PythonUtils.toSeq(picked), sql_conf.ignoreCorruptFiles()
+    )
+    found = pff.readSchema(footers, spark._jsparkSession)
+    if found.isEmpty():
+        return None
+    return T.StructType.fromJson(json.loads(found.get().json()))
+
+
+def _parquet_reader(spark: SparkSession, paths) -> tuple:
+    """(DataFrameReader with the footer schema pinned, root FileStatus
+    list). With no footer to read (a path missing, empty or holding no
+    data file) the reader is plain `spark.read`, which raises Spark's
+    own PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA that callers match;
+    the list is None when a path is missing."""
+    conf, roots = _parquet_roots(spark, paths)
+    schema = _footer_schema(spark, conf, roots) if roots else None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader, roots
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """`spark.read.parquet(*paths)` without its schema-inference job.
+
+    Spark infers a parquet schema with one Spark job per open
+    (ParquetFileFormat.mergeSchemasInParallel). This reads the same
+    footer on the driver instead and hands the result to
+    `spark.read.schema(...)`, so the DataFrame, its plan and its
+    errors are Spark's own and opening it starts no job. Partition
+    columns of a `k=v` layout are still inferred by Spark's listing,
+    under the session's partition type-inference setting."""
+    return _parquet_reader(spark, paths)[0].parquet(*paths)
+
+
+def stream_source(spark: SparkSession, base: str, name: str) -> DataFrame:
     """File-stream source for one logical table, adaptive to layout:
     Spark's file stream needs a DIRECTORY basePath, so a flat
     `{name}.parquet` FILE is read via pathGlobFilter on its parent,
     while a `{name}.parquet/` directory of part-files is read
-    directly (the glob would match no leaf file there). The layout
-    check goes through the Hadoop FileSystem API so it answers
-    correctly on any filesystem (local, HDFS, S3A), not just local
-    paths. Event time is canonicalized like the batch loader
-    (`stream_event_time`)."""
+    directly (the glob would match no leaf file there). Schema and
+    layout come from the one Hadoop FileSystem status lookup that
+    read_parquet makes, so the check answers on any filesystem
+    (local, HDFS, S3A) and starts no Spark job. Event time is
+    canonicalized like the batch loader (`stream_event_time`)."""
     path = f"{base}/{name}.parquet"
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        is_dir = fs.getFileStatus(hpath).isDirectory()
-    except Exception:
-        import os
-
-        is_dir = os.path.isdir(path)
-    if is_dir:
+    reader, roots = _parquet_reader(spark, [path])
+    schema = reader.parquet(path).schema  # raises if `path` is missing
+    if roots[0].isDirectory():
         raw = spark.readStream.schema(schema).parquet(path)
     else:
         raw = (
@@ -254,7 +370,9 @@ def load_table_window(
         if hi_ms is not None:
             df = df.filter(F.col(col) <= hi_ms)
         return df
-    raw = spark.read.parquet(f"{base}/{_resolve_replay(name, replay)}.parquet")
+    raw = read_parquet(
+        spark, f"{base}/{_resolve_replay(name, replay)}.parquet"
+    )
     dt = raw.schema[col].dataType
     if lo_ms is not None:
         raw = raw.filter(F.col(col) >= _raw_ts_literal(dt, lo_ms))
@@ -297,12 +415,12 @@ def load_table(
         unit = spark.conf.get(CASSANDRA_TS_UNIT_CONF, None)
         return normalize_event_time(df, long_unit=unit)
     if not memoizable(base):
-        df = spark.read.parquet(f"{base}/{name}.parquet")
+        df = read_parquet(spark, f"{base}/{name}.parquet")
         return normalize_event_time(df, long_unit="ns")
     memo = _TABLE_MEMO.setdefault(spark, {})
     key = (base, name)
     if key not in memo:
-        df = spark.read.parquet(f"{base}/{name}.parquet")
+        df = read_parquet(spark, f"{base}/{name}.parquet")
         # parquet path: long ts is TIMESTAMP(NANOS)-as-long by the
         # testdata contract (tests/test_testdata_contract.py pins it).
         memo[key] = normalize_event_time(df, long_unit="ns")

@@ -24,6 +24,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .loader import read_parquet
+
 MS_PER_DAY = 86_400_000
 
 
@@ -120,8 +122,8 @@ def compact_partitioned_parquet(
     spark.conf.set(infer_key, "false")
     try:
         if not fs.exists(committed):
-            _write(spark.read.parquet(path), stage)
-        _write(spark.read.parquet(stage), path)
+            _write(read_parquet(spark, path), stage)
+        _write(read_parquet(spark, stage), path)
     finally:
         spark.conf.set(infer_key, saved)
     fs.delete(spath, True)

@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sources.loader import read_parquet
+
 
 def latest_value_stream(
     stream: DataFrame,
@@ -453,7 +455,7 @@ def read_upsert_sink(spark, path: str, key_cols: list[str]) -> DataFrame:
     point lookups). One window over key, no shuffle beyond it."""
     from pyspark.sql import Window
 
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     w = Window.partitionBy(*key_cols).orderBy(F.col("batch_id").desc())
     return (
         df.withColumn("__rn", F.row_number().over(w))
@@ -499,7 +501,7 @@ def foreach_batch_merge_sink(
         snaps = [n for n in _committed_snaps(path, spark) if n < batch_id]
         if not snaps:
             return None
-        return spark.read.parquet(f"{path}/snap_{max(snaps)}")
+        return read_parquet(spark, f"{path}/snap_{max(snaps)}")
 
     def _write(batch_df, batch_id: int) -> None:
         from ..operators.merge import apply_changes
@@ -587,7 +589,7 @@ def read_merge_sink(spark, path: str, version: int | None = None) -> DataFrame:
             f"no committed snap_* snapshots under {path}"
             + (f" at or below version {version}" if version is not None else "")
         )
-    return spark.read.parquet(f"{path}/snap_{max(snaps)}")
+    return read_parquet(spark, f"{path}/snap_{max(snaps)}")
 
 
 def quota_stream(
@@ -811,7 +813,7 @@ def foreach_batch_ivm_sink(
         spark = batch_df.sparkSession
         snaps = [n for n in _committed_snaps(path, spark) if n < batch_id]
         if snaps:
-            prev = spark.read.parquet(f"{path}/snap_{max(snaps)}")
+            prev = read_parquet(spark, f"{path}/snap_{max(snaps)}")
         else:
             prev = (
                 batch_df.groupBy(*key_cols)
@@ -1130,7 +1132,7 @@ def foreach_batch_bm25_ingest(
         # doc): docs the crashed attempt already appended drop out
         fresh, _suspect = _index_member_guard(
             spark, pairs_sink, batch_id, batch_df, id_col,
-            lambda: spark.read.parquet(f"{path}/doc_len").select(
+            lambda: read_parquet(spark, f"{path}/doc_len").select(
                 F.col("doc").alias(id_col)
             ),
         )
@@ -1174,7 +1176,7 @@ def foreach_batch_positional_ingest(
 
         fresh, _suspect = _index_member_guard(
             spark, pairs_sink, batch_id, batch_df, id_col,
-            lambda: spark.read.parquet(f"{path}/postings")
+            lambda: read_parquet(spark, f"{path}/postings")
             .select(F.col("doc").alias(id_col))
             .distinct(),
         )
@@ -1213,11 +1215,11 @@ def foreach_batch_ivf_ingest(
 
         fresh, suspect = _index_member_guard(
             spark, pairs_sink, batch_id, batch_df, id_col,
-            lambda: spark.read.parquet(f"{path}/assignment").select(
+            lambda: read_parquet(spark, f"{path}/assignment").select(
                 F.col("vec_id").alias(id_col)
             ),
         )
-        cents = spark.read.parquet(f"{path}/centroids")
+        cents = read_parquet(spark, f"{path}/centroids")
         # one batch-sized assignment pass feeds both consumers (the
         # append and the artifact); eager so neither recomputes it
         assigned = _assign(
@@ -1268,7 +1270,7 @@ def foreach_batch_pq_ingest(
 
         fresh, _suspect = _index_member_guard(
             spark, pairs_sink, batch_id, batch_df, id_col,
-            lambda: spark.read.parquet(f"{path}/codes")
+            lambda: read_parquet(spark, f"{path}/codes")
             .filter(F.col("sub") == 0)
             .select(F.col("vec_id").alias(id_col)),
         )
@@ -1390,7 +1392,7 @@ def read_index_ingest_pairs(spark, pairs_sink: str) -> DataFrame:
         raise FileNotFoundError(
             f"no committed pairs_* batches under {pairs_sink}"
         )
-    return spark.read.parquet(*dirs)
+    return read_parquet(spark, *dirs)
 
 
 def compact_ingest_pairs(
@@ -1489,7 +1491,7 @@ def compact_ingest_pairs(
     if prev is not None:
         srcs.insert(0, f"{pairs_sink}/baseline_{prev}")
     target = f"{pairs_sink}/baseline_{new_id}"
-    spark.read.parquet(*srcs).coalesce(n_files).write.mode(
+    read_parquet(spark, *srcs).coalesce(n_files).write.mode(
         "overwrite"
     ).parquet(target)
     # commit point passed (the write left _SUCCESS): cleanup below

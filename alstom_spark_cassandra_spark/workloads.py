@@ -72,7 +72,7 @@ from .operators.sampling import (
 )
 from .operators.setops import latest_state_sym_diff, symmetric_diff_rows
 from .operators.similarity import cosine_topk, ivf_topk
-from .sources.loader import load_table, load_table_window
+from .sources.loader import load_table, load_table_window, read_parquet
 from .streaming.live_state import latest_value_stream
 
 # epoch-millis literals (UTC)
@@ -677,7 +677,7 @@ def q_compaction_persisted(spark, sf_dir):
 
     path = _scratch(sf_dir, "compacted_log")
     write_compacted_log(_compacted_log(spark, sf_dir), path)
-    return _compacted_as_events(spark.read.parquet(path))
+    return _compacted_as_events(read_parquet(spark, path))
 
 
 def q_sessionization(spark, sf_dir):
@@ -5008,7 +5008,6 @@ def q_stream_index_ingest(spark, sf_dir):
     re-crawls share every band key (pigeonhole completeness).  The
     replay/exactly-once contract is pinned in
     tests/test_streaming.py."""
-    import glob
     import os
 
     from .streaming.live_state import (
@@ -5025,19 +5024,14 @@ def q_stream_index_ingest(spark, sf_dir):
     shard = docs.filter(F.col("doc_id") % 5 == 0)
     src_dir = f"{base_dir}/src"
     os.makedirs(src_dir)
-    batches = []
-    for k in range(3):
-        b = shard.select(
+    batches = [
+        shard.select(
             (F.col("doc_id") + (k + 1) * 10_000_000).alias("doc_id"),
             "text",
         )
-        batches.append(b)
-        stage = f"{base_dir}/stage{k}"
-        b.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/batch{k}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+        for k in range(3)
+    ]
+    _stage_stream_batches(batches, src_dir, base_dir)
     src = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -5105,7 +5099,6 @@ def q_stream_simhash_ingest(spark, sf_dir):
     second family runs the identical sink skeleton with only the
     incremental operator swapped (replay no-op pinned in
     tests/test_streaming.py for this family too)."""
-    import glob
     import os
 
     from .streaming.live_state import (
@@ -5122,19 +5115,14 @@ def q_stream_simhash_ingest(spark, sf_dir):
     shard = docs.filter(F.col("doc_id") % 5 == 0)
     src_dir = f"{base_dir}/src"
     os.makedirs(src_dir)
-    batches = []
-    for k in range(3):
-        b = shard.select(
+    batches = [
+        shard.select(
             (F.col("doc_id") + (k + 1) * 10_000_000).alias("doc_id"),
             "text",
         )
-        batches.append(b)
-        stage = f"{base_dir}/stage{k}"
-        b.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/batch{k}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+        for k in range(3)
+    ]
+    _stage_stream_batches(batches, src_dir, base_dir)
     src = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -5181,7 +5169,6 @@ def q_stream_semantic_ingest(spark, sf_dir):
     SQL_SEMANTIC_INDEX_APPEND chain generalized to N shards).
     Replay-after-success no-op for this member is pinned in
     tests/test_streaming.py."""
-    import glob
     import os
 
     from .operators.similarity import (
@@ -5210,16 +5197,14 @@ def q_stream_semantic_ingest(spark, sf_dir):
         )
     )
     build_semantic_index(base, init, index_path, threshold=0.4)
-    for k in range(3):
-        b = emb.filter(F.col("vec_id") % 8 == k).select(
-            "vec_id", "embedding"
-        )
-        stage = f"{base_dir}/stage{k}"
-        b.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/batch{k}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+    _stage_stream_batches(
+        [
+            emb.filter(F.col("vec_id") % 8 == k).select("vec_id", "embedding")
+            for k in range(3)
+        ],
+        src_dir,
+        base_dir,
+    )
 
     def _fn(spark_, batch_df, path):
         return incremental_semantic_dedup(
@@ -5272,7 +5257,6 @@ def q_stream_bm25_ingest(spark, sf_dir):
     Member-specific replay guard (anti-join vs persisted doc_len —
     a double-append would corrupt scores, not cost bytes) pinned in
     tests/test_streaming.py."""
-    import glob
     import os
 
     from .operators.retrieval import bm25_topk, read_bm25_index
@@ -5286,16 +5270,16 @@ def q_stream_bm25_ingest(spark, sf_dir):
     os.makedirs(pairs_sink)
     os.makedirs(src_dir)
     _clone_index(spark, sf_dir, "bm25_twothirds", index_path)
-    for k in range(3):
-        b = docs.filter(F.col("doc_id") % 9 == 3 * k).select(
-            "doc_id", "text"
-        )
-        stage = f"{base_dir}/stage{k}"
-        b.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/batch{k}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+    _stage_stream_batches(
+        [
+            docs.filter(F.col("doc_id") % 9 == 3 * k).select(
+                "doc_id", "text"
+            )
+            for k in range(3)
+        ],
+        src_dir,
+        base_dir,
+    )
     src = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -5341,7 +5325,6 @@ def q_stream_winnow_ingest(spark, sf_dir):
     (SQL_STREAM_WINNOW_INGEST = SQL_WINNOW_INDEX_APPEND generalized
     to three shards).  Replay no-op pinned in
     tests/test_streaming.py."""
-    import glob
     import os
 
     from .operators.winnow import build_winnow_index
@@ -5365,17 +5348,17 @@ def q_stream_winnow_ingest(spark, sf_dir):
         docs, index_path, "text", "doc_id", k=8, w=4, portable=True
     )
     shard = docs.filter(F.col("doc_id") % 3 == 0)
-    for k in range(3):
-        b = shard.select(
-            (F.col("doc_id") + (k + 1) * 10_000_000).alias("doc_id"),
-            "text",
-        )
-        stage = f"{base_dir}/stage{k}"
-        b.coalesce(1).write.mode("overwrite").parquet(stage)
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/batch{k}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+    _stage_stream_batches(
+        [
+            shard.select(
+                (F.col("doc_id") + (k + 1) * 10_000_000).alias("doc_id"),
+                "text",
+            )
+            for k in range(3)
+        ],
+        src_dir,
+        base_dir,
+    )
     src = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
@@ -7861,14 +7844,8 @@ def q_stream_attribution(spark, sf_dir):
 
     from .sources.loader import stream_source
 
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema  # one footer read, reused
-
-    def _src():
-        return stream_source(spark, sf_dir, "events", schema=schema)
-
     clicks = (
-        _src()
+        stream_source(spark, sf_dir, "events")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("c_user"),
@@ -7877,7 +7854,7 @@ def q_stream_attribution(spark, sf_dir):
         )
     )
     purchases = (
-        _src()
+        stream_source(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -8602,7 +8579,6 @@ def q_stream_late_data(spark, sf_dir):
     same file assignment. State stays bounded by the watermark
     horizon, not stream length — exactly the eviction contract this
     query proves."""
-    import glob
     import os
     import uuid
 
@@ -8636,21 +8612,11 @@ def q_stream_late_data(spark, sf_dir):
     # per-batch filters; released before the replay starts)
     ev = ev.cache()
     try:
-        for k in range(4):
-            stage = f"{base}/stage{k}"
-            (
-                ev.filter(F.col("b") == k)
-                .drop("b")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            part = glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{src_dir}/batch{k}.parquet"
-            shutil.copyfile(part, dst)
-            # FileStreamSource orders by modification time: pin it so
-            # the replay processes the files in assignment order
-            os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+        _stage_stream_batches(
+            [ev.filter(F.col("b") == k).drop("b") for k in range(4)],
+            src_dir,
+            base,
+        )
     finally:
         ev.unpersist()
     schema = ev.drop("b").schema
@@ -8763,7 +8729,6 @@ def _staged_interval_join_replay(spark, sf_dir, how, tag, files=None):
     tests/test_streaming.py::test_replay_leaves_caller_conf_untouched).
     The returned DataFrame is bound to the clone; collecting it from
     the caller is fine (same SparkContext)."""
-    import glob
     import os
     import uuid
 
@@ -8826,22 +8791,16 @@ def _staged_interval_join_replay(spark, sf_dir, how, tag, files=None):
     )
     for side, parity in (("L", 0), ("R", 1)):
         os.makedirs(f"{base}/{side}")
-        for k in range(n_files):
-            stage = f"{base}/stage_{side}{k}"
-            (
+        _stage_stream_batches(
+            [
                 ev.filter(
-                    (F.col("b") == k)
-                    & (F.col("event_id") % 2 == parity)
-                )
-                .drop("b")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            part = glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{base}/{side}/batch{k}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+                    (F.col("b") == k) & (F.col("event_id") % 2 == parity)
+                ).drop("b")
+                for k in range(n_files)
+            ],
+            f"{base}/{side}",
+            base,
+        )
     left = (
         sess.readStream.schema(
             "event_id long, ts long, user_id long, v_milli long"
@@ -9071,7 +9030,6 @@ def q_stream_quota(spark, sf_dir):
     20 by event_id" — which the batch row_number oracle reproduces.
     Saturated keys keep arriving across later batches and must stay
     rejected (cross-batch state, not a per-batch head)."""
-    import glob
     import os
     import uuid
 
@@ -9094,21 +9052,17 @@ def q_stream_quota(spark, sf_dir):
     os.makedirs(src_dir)
     ev = ev.cache()
     try:
-        for k in range(4):
-            stage = f"{base}/stage{k}"
-            (
+        _stage_stream_batches(
+            [
                 ev.filter(
                     (F.col("event_id") >= k * span)
                     & (F.col("event_id") < (k + 1) * span)
                 )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            part = glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{src_dir}/batch{k}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+                for k in range(4)
+            ],
+            src_dir,
+            base,
+        )
     finally:
         ev.unpersist()
     src = spark.readStream.schema(
@@ -9311,7 +9265,6 @@ def q_stream_cdc_apply(spark, sf_dir):
     by its globally largest event_id regardless of which file carried
     it. The per-batch compute is one minimized-changes join against
     the snapshot, never a re-aggregation of history."""
-    import glob
     import os
 
     from .streaming.live_state import (
@@ -9357,19 +9310,16 @@ def q_stream_cdc_apply(spark, sf_dir):
     )
     src_dir = f"{base_dir}/src"
     os.makedirs(src_dir)
-    for k in range(3):
-        stage = f"{base_dir}/stage{k}"
-        (
-            changes.filter(F.col("fb") == k)
-            .select("user_id", "event_type", "event_id", "v_cents", "op")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/batch{k}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+    _stage_stream_batches(
+        [
+            changes.filter(F.col("fb") == k).select(
+                "user_id", "event_type", "event_id", "v_cents", "op"
+            )
+            for k in range(3)
+        ],
+        src_dir,
+        base_dir,
+    )
     src = (
         spark.readStream.schema(
             "user_id long, event_type string, event_id long,"
@@ -9413,7 +9363,6 @@ def q_ivm_time_travel(spark, sf_dir):
     prefix's equality with the one-shot recompute. The final
     cnt != 0 filter is the view's HAVING — mid-history a key can
     legitimately sit at cnt 0 with a nonzero total in STATE."""
-    import glob
     import os
 
     from .operators.ivm import agg_state
@@ -9446,19 +9395,16 @@ def q_ivm_time_travel(spark, sf_dir):
     )
     src_dir = f"{base_dir}/src"
     os.makedirs(src_dir)
-    for k in range(3):
-        stage = f"{base_dir}/stage{k}"
-        (
-            deltas.filter(F.col("event_id") % 3 == k)
-            .select("user_id", "event_type", "cents", "mult")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/batch{k}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+    _stage_stream_batches(
+        [
+            deltas.filter(F.col("event_id") % 3 == k).select(
+                "user_id", "event_type", "cents", "mult"
+            )
+            for k in range(3)
+        ],
+        src_dir,
+        base_dir,
+    )
     src = (
         spark.readStream.schema(
             "user_id long, event_type string, cents long, mult int"
@@ -9529,7 +9475,6 @@ def q_stream_agg_maintenance(spark, sf_dir):
     eliminated from state — the file split is by event_id % 3, so
     corrections routinely land in different batches than the rows
     they correct, making the transient-state survival non-vacuous."""
-    import glob
     import os
 
     from .operators.ivm import agg_state
@@ -9562,19 +9507,16 @@ def q_stream_agg_maintenance(spark, sf_dir):
     )
     src_dir = f"{base_dir}/src"
     os.makedirs(src_dir)
-    for k in range(3):
-        stage = f"{base_dir}/stage{k}"
-        (
-            deltas.filter(F.col("event_id") % 3 == k)
-            .select("user_id", "event_type", "cents", "mult")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        part = glob.glob(f"{stage}/part-*.parquet")[0]
-        dst = f"{src_dir}/batch{k}.parquet"
-        shutil.copyfile(part, dst)
-        os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+    _stage_stream_batches(
+        [
+            deltas.filter(F.col("event_id") % 3 == k).select(
+                "user_id", "event_type", "cents", "mult"
+            )
+            for k in range(3)
+        ],
+        src_dir,
+        base_dir,
+    )
     src = (
         spark.readStream.schema(
             "user_id long, event_type string, cents long, mult int"
@@ -9694,7 +9636,7 @@ def q_partitioned_ingest(spark, sf_dir):
         F.expr("greatest(ts DIV 86400000 - 19723, 0)").alias("day"),
     )
     write_partitioned(ev, path, ["day"])
-    back = spark.read.parquet(path).filter(
+    back = read_parquet(spark, path).filter(
         (F.col("day") >= 10) & (F.col("day") <= 19)
     )
     return (
@@ -9803,7 +9745,6 @@ def q_stream_latest_ttl(spark, sf_dir):
     the key has no data (all pinned by tests/test_streaming.py::
     test_ttl_timeout_fires_strictly_above_watermark and the TTL
     lifecycle tests, so a Spark upgrade fails locally first)."""
-    import glob
     import os
 
     from .streaming.live_state import (
@@ -9838,19 +9779,11 @@ def q_stream_latest_ttl(spark, sf_dir):
     os.makedirs(src_dir)
     ev = ev.cache()
     try:
-        for k in range(4):
-            stage = f"{base}/stage{k}"
-            (
-                ev.filter(F.col("b") == k)
-                .drop("b")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(stage)
-            )
-            part = glob.glob(f"{stage}/part-*.parquet")[0]
-            dst = f"{src_dir}/batch{k}.parquet"
-            shutil.copyfile(part, dst)
-            os.utime(dst, (1_000_000_000 + 60 * k,) * 2)
+        _stage_stream_batches(
+            [ev.filter(F.col("b") == k).drop("b") for k in range(4)],
+            src_dir,
+            base,
+        )
         schema = ev.drop("b").schema
     finally:
         ev.unpersist()
